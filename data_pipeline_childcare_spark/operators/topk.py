@@ -11,6 +11,11 @@ logic; the Spark restatement is two stacked windows (SURVEY.md §2.5 W2):
 
 Windowed row_number is the scalable top-k shape: no global sort, each
 partition key sorts independently, AQE balances skew.
+
+``top_k_sequential_dedup`` is the literal task-by-task restatement.
+When every task ranks the SAME candidates by the same score (X-Pilot's
+reranked list), sequential dedup reduces to slicing one ranking —
+``plans.retrieval.xpilot_retrieval`` does that instead.
 """
 
 from __future__ import annotations
@@ -172,7 +177,10 @@ def top_k_sequential_dedup(
     ``task_order`` is plan metadata (a handful of tasks per request in
     the reference), so the loop composes ~len(task_order) anti-joins
     into one lazy plan — still fully distributed per stage; the used-
-    set never leaves the cluster.
+    set never leaves the cluster. Each anti-join re-derives the earlier
+    tasks' picks, so use this only when tasks have DIFFERENT candidate
+    sets or scores; when all tasks share one scored list, task j's
+    picks are ranks j*k+1 .. (j+1)*k of it (see xpilot_retrieval).
     """
     if not task_order:
         raise ValueError("task_order must be non-empty")

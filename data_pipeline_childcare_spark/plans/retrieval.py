@@ -20,14 +20,14 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from data_pipeline_childcare_spark.functions.dates import parse_ts_multi
 from data_pipeline_childcare_spark.functions.text import kv_block_to_map, pipe_header_to_map
+from data_pipeline_childcare_spark.io import resilient_checkpoint
 from data_pipeline_childcare_spark.operators.rrf import rank_lists, rrf_fuse
 from data_pipeline_childcare_spark.operators.rules import RegionalRule, check_rule, record_type_col
-from data_pipeline_childcare_spark.operators.topk import top_k_sequential_dedup
 
 
 def enrich_chunks_with_doc_meta(chunks: DataFrame, doc_meta: DataFrame) -> DataFrame:
@@ -109,8 +109,9 @@ def tuoyu_rule_filter(
     5. roll up db→document with position-ordered blocks and
        Tuoyu_Questionnaire / Tuoyu_institution classification.
 
-    ``checkpoint`` (default on) LAZILY localCheckpoints the parsed
-    narrow projections and the surviving document-id set before the
+    ``checkpoint`` (default on) LAZILY checkpoints (through
+    :func:`io.resilient_checkpoint`) the parsed narrow projections and
+    the surviving document-id set before the
     segment semi-join (lazy: plan building must never run jobs —
     test_no_driver_actions_while_building_plans; the RDDs materialize
     once at the first action). The kv-parse + gazetteer rule condition are
@@ -131,22 +132,22 @@ def tuoyu_rule_filter(
         # narrow projection (ids + extracted fields) then cut lineage:
         # downstream the rule condition references plain materialized
         # columns, so the kv-parse tree can't be inlined per reference
-        parsed_chunks = parsed_chunks.select(
+        parsed_chunks = resilient_checkpoint(parsed_chunks.select(
             "database_id", "document_id", "record_type", *_FIELDS
-        ).localCheckpoint(eager=False)
+        ))
     hits = (
         parsed_chunks.filter(cond)
         .select("database_id", "document_id")
         .distinct()
     )
     if checkpoint:
-        hits = hits.localCheckpoint(eager=False)
+        hits = resilient_checkpoint(hits)
     parsed_segs = extract_rule_fields(parse_chunk_records(segments))
     if checkpoint:
-        parsed_segs = parsed_segs.select(
+        parsed_segs = resilient_checkpoint(parsed_segs.select(
             "database_id", "document_id", "position", "content",
             "record_type", *_FIELDS,
-        ).localCheckpoint(eager=False)
+        ))
     seg_checked = (
         parsed_segs
         .join(hits, ["database_id", "document_id"], "left_semi")
@@ -368,6 +369,12 @@ def xpilot_retrieval(
     reference's degradation chain) → per-task top-k with
     first-task-wins dedup → db→doc rollup with score-ordered blocks.
 
+    Every task ranks the same capped list by the same score, so the
+    per-task top-k is one slice of it: task j (0-based, ``task_id``
+    order) gets ranks ``j*top_k+1 .. (j+1)*top_k`` of (score desc,
+    chunk_id) — :func:`top_k_sequential_dedup`'s picks without its
+    anti-joins. Duplicate and NULL task ids count once / not at all.
+
     ``rerank_scorer``: None skips the rerank stage entirely;
     :func:`bm25_rerank_scorer` is the shippable local default
     (pass ``bm25_rerank_scorer(query)``); a hosted cross-encoder
@@ -396,27 +403,17 @@ def xpilot_retrieval(
     else:
         order_col = "rrf_score"
 
-    # task list is plan metadata (a handful per request) — collecting
-    # it is not a data-path collect. The guard makes MISUSE (passing a
-    # fact table as ``tasks``) fail loudly instead of silently pulling
-    # an unbounded list onto the driver and cross-joining it.
-    _MAX_TASKS = 10_000
-    task_rows = tasks.select("task_id").distinct().limit(_MAX_TASKS + 1).collect()
-    if len(task_rows) > _MAX_TASKS:
-        raise ValueError(
-            f"tasks has more than {_MAX_TASKS} distinct task_ids — this "
-            "argument is per-request plan metadata, not a data table"
-        )
-    task_order = sorted(r["task_id"] for r in task_rows)
-    cand = capped.crossJoin(F.broadcast(tasks.select("task_id").distinct()))
-    winners = top_k_sequential_dedup(
-        cand,
-        task_order,
-        task_col="task_id",
-        item_col="chunk_id",
-        score_col=order_col,
-        k=top_k,
+    # top_k_per_group's order (desc: NaN first, NULL last); both
+    # windows hold <= rerank_cap rows / a handful of tasks
+    if top_k < 1:  # also keeps ANSI's DIVIDE_BY_ZERO out of the slot
+        capped = capped.limit(0)
+    rn = F.row_number().over(Window.orderBy(F.desc(order_col), "chunk_id"))
+    ranked = capped.withColumn("_slot", F.floor((rn - 1) / top_k))
+    task_slots = (
+        tasks.select("task_id").dropna().distinct()
+        .withColumn("_slot", F.row_number().over(Window.orderBy("task_id")) - 1)
     )
+    winners = ranked.join(F.broadcast(task_slots), "_slot").drop("_slot")
     blocks = F.array_sort(
         F.collect_list(
             F.struct(

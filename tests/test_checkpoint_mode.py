@@ -71,3 +71,36 @@ def test_default_mode_stays_local(spark):
     out = resilient_checkpoint(df, eager=True)
     # localCheckpoint: plan truncated, no reliable dir requirement
     assert out.count() == 10
+
+
+def test_tuoyu_rule_filter_reliable_mode_same_output(spark, reliable):
+    """tuoyu_rule_filter's three lineage cuts route through
+    resilient_checkpoint: reliable mode writes them into the checkpoint
+    dir and returns the same rows as the default local mode."""
+    from data_pipeline_childcare_spark.operators.rules import RegionalRule
+    from data_pipeline_childcare_spark.plans.retrieval import tuoyu_rule_filter
+
+    inst = "机构名称：天使托育园\n统一社会信用代码：9151\n详细地址：四川省成都市\n备案及完成时间：2025-05-10"
+    old = "机构名称：旧机构\n统一社会信用代码：9150\n详细地址：四川省成都市\n备案及完成时间：2019-01-01"
+    schema = "database_id string, document_id string, chunk_id string, position int, content string"
+    chunks = spark.createDataFrame(
+        [("db1", "d1", "c1", 0, inst), ("db1", "d2", "c2", 0, old)], schema
+    )
+    segments = spark.createDataFrame(
+        [("db1", "d1", "s1", 0, inst), ("db1", "d1", "s2", 1, inst),
+         ("db1", "d2", "s3", 0, old)],
+        schema,
+    )
+    rule = RegionalRule(scope="四川", time_filter="近两年")
+
+    def rows():
+        out = tuoyu_rule_filter(chunks, segments, rule)
+        return sorted(map(str, out.collect()))
+
+    got_reliable = rows()
+    files = glob.glob(os.path.join(reliable, "**", "part-*"), recursive=True)
+    assert files, "reliable mode must materialize into the checkpoint dir"
+    spark.conf.set(RELIABLE_CKPT_CONF, "false")
+    got_local = rows()
+    assert got_reliable == got_local
+    assert len(got_local) == 1 and "d1" in got_local[0]

@@ -93,6 +93,143 @@ def test_xpilot_retrieval_path(spark):
     assert claimed["c2"] == "t1"
 
 
+def _xpilot_via_sequential_dedup(retrieved, tasks, rerank_scorer, rerank_cap, top_k):
+    """xpilot_retrieval's former formulation: every task cross-joined
+    with the capped list, then one anti-join per task in task_id order
+    (top_k_sequential_dedup). The slice-based plan must match it."""
+    from data_pipeline_childcare_spark.operators.rrf import rank_lists, rrf_fuse
+    from data_pipeline_childcare_spark.operators.topk import top_k_sequential_dedup
+
+    fused = rrf_fuse(
+        rank_lists(retrieved, "query_id", "score", "chunk_id"),
+        item_col="chunk_id",
+        list_col="query_id",
+        payload_cols=["database_id", "document_id", "position", "content"],
+    )
+    capped = fused.orderBy(F.desc("rrf_score"), "chunk_id").limit(rerank_cap)
+    order_col = "rrf_score"
+    if rerank_scorer is not None:
+        capped, order_col = rerank_scorer(capped), "rerank_score"
+    task_ids = tasks.select("task_id").distinct()
+    winners = top_k_sequential_dedup(
+        capped.crossJoin(task_ids),
+        sorted(r["task_id"] for r in task_ids.collect()),
+        task_col="task_id",
+        item_col="chunk_id",
+        score_col=order_col,
+        k=top_k,
+    )
+    blocks = F.array_sort(F.collect_list(F.struct(
+        (-F.col(order_col)).alias("neg_score"), "position", "content", "chunk_id"
+    )))
+    return winners.groupBy("task_id", "database_id", "document_id").agg(
+        blocks.alias("content_blocks"), F.count("*").alias("n_blocks")
+    )
+
+
+def _null_nan_scorer(capped):
+    """Custom scorer with heavy ties, NULL and NaN rerank scores."""
+    h = F.abs(F.hash("chunk_id")) % 7
+    return capped.withColumn(
+        "rerank_score",
+        F.when(h == 0, F.lit(None).cast("double"))
+        .when(h == 1, F.lit(float("nan")))
+        .otherwise((h % 3).cast("double")),
+    )
+
+
+def _xpilot_random_inputs(spark, n_tasks, seed):
+    import random
+
+    rnd = random.Random(seed)
+    n_queries = 4
+    rows = [
+        # scores on a 0.1 grid: equal scores and equal RRF sums tie
+        (f"q{q}", f"c{c:02d}", round(rnd.randint(1, 5) / 10, 1), f"db{c % 2}",
+         f"d{c % 5}", c, f"text {c}")
+        for q in range(n_queries)
+        for c in rnd.sample(range(30), 12)
+    ]
+    retrieved = spark.createDataFrame(rows, _XPILOT_SCHEMA)
+    tasks = spark.createDataFrame(
+        [(f"t{t}", f"q{t % n_queries}") for t in range(n_tasks)],
+        "task_id string, query_id string",
+    )
+    return retrieved, tasks
+
+
+@pytest.mark.parametrize(
+    "n_tasks,top_k,rerank_cap,scorer",
+    [
+        (2, 3, 20, None),
+        (3, 4, 10, None),  # the third task runs off the capped list
+        (4, 2, 30, _null_nan_scorer),
+        (3, 5, 12, _null_nan_scorer),
+    ],
+)
+def test_xpilot_slice_matches_sequential_dedup(spark, n_tasks, top_k, rerank_cap, scorer):
+    retrieved, tasks = _xpilot_random_inputs(spark, n_tasks, seed=n_tasks * 10 + top_k)
+    new = xpilot_retrieval(
+        retrieved, tasks, rerank_scorer=scorer, rerank_cap=rerank_cap, top_k=top_k
+    )
+    old = _xpilot_via_sequential_dedup(retrieved, tasks, scorer, rerank_cap, top_k)
+    assert new.schema == old.schema
+    assert new.exceptAll(old).count() == 0
+    assert old.exceptAll(new).count() == 0
+    assert new.agg(F.sum("n_blocks")).first()[0] == min(n_tasks * top_k, rerank_cap)
+
+
+def test_xpilot_task_edge_cases(spark):
+    retrieved = spark.createDataFrame(_XPILOT_ROWS, _XPILOT_SCHEMA)
+    task_schema = "task_id string, query_id string"
+    base = xpilot_retrieval(
+        retrieved, spark.createDataFrame([("t1", "q1")], task_schema), top_k=2
+    )
+    # top_k < 1: empty, same schema (k=0 would divide by zero in the slot)
+    for k in (0, -1):
+        out = xpilot_retrieval(
+            retrieved, spark.createDataFrame([("t1", "q1")], task_schema), top_k=k
+        )
+        assert out.schema == base.schema
+        assert out.count() == 0
+    # no tasks: empty result (the anti-join formulation raised)
+    none = xpilot_retrieval(retrieved, spark.createDataFrame([], task_schema), top_k=2)
+    assert none.schema == base.schema
+    assert none.count() == 0
+    # duplicate task rows count once; NULL task ids take nothing; the
+    # 3 capped chunks at k=2 leave t2 one chunk and t3 none
+    tasks = spark.createDataFrame(
+        [("t1", "q1"), ("t1", "q2"), ("t2", "q2"), ("t3", "q1"), (None, "q1")],
+        task_schema,
+    )
+    got: dict[str, list[str]] = {}
+    for r in xpilot_retrieval(retrieved, tasks, top_k=2).collect():
+        got.setdefault(r["task_id"], []).extend(b["chunk_id"] for b in r["content_blocks"])
+    assert {t: sorted(c) for t, c in got.items()} == {"t1": ["c1", "c2"], "t2": ["c3"]}
+
+
+def test_xpilot_plan_builds_without_jobs_or_anti_joins(spark):
+    from data_pipeline_childcare_spark.plans.retrieval import bm25_rerank_scorer
+
+    retrieved = spark.createDataFrame(_XPILOT_ROWS, _XPILOT_SCHEMA)
+    tasks = spark.createDataFrame([("t1", "q1"), ("t2", "q2")], "task_id string, query_id string")
+    sc = spark.sparkContext
+    group = "xpilot-plan-build"
+    sc.setJobGroup(group, "plan construction must not execute")
+    try:
+        out = xpilot_retrieval(
+            retrieved, tasks, rerank_scorer=bm25_rerank_scorer("beta summary"), top_k=2
+        )
+        assert out.columns
+    finally:
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        sc.setJobGroup("", "")
+    assert len(jobs) == 0
+    assert out.count() > 0
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "LeftAnti" not in plan, plan
+
+
 def test_bm25_rerank_scorer_values_and_zero_hit(spark):
     """The shippable default scorer (reference retrieve.py:184-232's
     local stand-in for the hosted cross-encoder): hand-computed BM25

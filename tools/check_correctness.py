@@ -15,13 +15,14 @@ the default 1e-6 comparison forgives.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod
 import data_pipeline_childcare_spark as eng

@@ -13,11 +13,13 @@ tolerance (JPEG). Any failure prints the reproducing seed. Exit code
 
 from __future__ import annotations
 
+import os
 import random
 import sys
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
+sys.path.insert(0, os.path.join(_ROOT, "tests"))
 
 from test_imagecodec import (  # noqa: E402  (test-side encoders)
     _jpeg_encode,
