@@ -1428,8 +1428,7 @@ def minhash_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dedup, FULLY oracled: the engine-portable
     Carter–Wegman hash family (operators/dedup.py) makes the kept-doc
     set bit-identical in DuckDB — banding, candidate pairs, jaccard
-    estimate and the drop-larger-id rule all hash-exact. The xxhash64
-    ``minhash_dedup`` stays the opt-in production knob. Runs with
+    estimate and the drop-larger-id rule all hash-exact. Runs with
     cap_per_id=1 — the one-sided keep-first-dominator guard that is
     SEMANTICALLY FREE for the anti-join consumer (each dropped doc
     needs only ONE dominating pair to survive to the distinct), so
@@ -3041,8 +3040,7 @@ def minhash_portable_pairs_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL-oracle MinHash: the banded-LSH pipeline with an md5-derived
     hash family both engines compute bit-identically — signatures,
     band buckets, candidate pairs and the k/64 Jaccard estimate are
-    all hash-exact against the DuckDB oracle (the xxhash64 production
-    path above stays rows-only). Engages cap_per_id=20
+    all hash-exact against the DuckDB oracle. Engages cap_per_id=20
     (strongest-est_jaccard top-20-per-side windows, oracle-mirrored)
     — the duplicate-saturation guard bounding downstream pair volume
     to linear on verbatim-copy-cluster corpora."""
@@ -3095,8 +3093,7 @@ def minhash_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def simhash_portable_pairs_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL-oracle SimHash: bit votes from md5-derived hashes, 16-bit
     pigeonhole bands, hamming filter — every stage bit-exact against
-    the DuckDB oracle (the xxhash64 path below stays rows-only).
-    Engages cap_per_id=20 (nearest-hamming top-20-per-side windows,
+    the DuckDB oracle. Engages cap_per_id=20 (nearest-hamming top-20-per-side windows,
     oracle-mirrored) — the duplicate-saturation guard."""
     from data_pipeline_childcare_spark.operators.dedup import simhash_pairs_portable
 
@@ -3107,9 +3104,7 @@ def simhash_portable_pairs_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def simhash_pairs_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup candidate pairs on the portable hash family,
     FULLY oracled at the blocked-candidate semantics (4×16-bit
-    pigeonhole bands, hamming ≤ 8). The xxhash64
-    ``simhash_near_dup_pairs`` stays the opt-in production knob.
-    Engages cap_per_id=20 (nearest-hamming top-20-per-side windows,
+    pigeonhole bands, hamming ≤ 8). Engages cap_per_id=20 (nearest-hamming top-20-per-side windows,
     oracle-mirrored) — the duplicate-saturation guard."""
     from data_pipeline_childcare_spark.operators.dedup import simhash_pairs_portable
 
@@ -5172,7 +5167,7 @@ def winnowing_fingerprints_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_childcare_spark.operators.dedup import winnowing_fingerprints
 
     docs = _t(spark, sf_dir, "documents")
-    return winnowing_fingerprints(docs, k=8, window=4, portable_hash=True)
+    return winnowing_fingerprints(docs, k=8, window=4)
 
 
 # ---------------------------------------------------------------------------
@@ -5381,7 +5376,7 @@ def winnowing_pairs_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_childcare_spark.operators.skew import df_capped_index
 
     docs = _t(spark, sf_dir, "documents")
-    fps = winnowing_fingerprints(docs, k=8, window=4, portable_hash=True)
+    fps = winnowing_fingerprints(docs, k=8, window=4)
     fps = df_capped_index(fps, "fingerprint", max_df=64)
     a = fps.select(F.col("doc_id").alias("id_a"), "fingerprint")
     b = fps.select(F.col("doc_id").alias("id_b"), "fingerprint")
@@ -6651,7 +6646,7 @@ def doc_shared_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_childcare_spark.operators.dedup import shared_span_pairs
 
     docs = _t(spark, sf_dir, "documents")
-    return shared_span_pairs(docs, k=5, min_span_tokens=10, portable_hash=True)
+    return shared_span_pairs(docs, k=5, min_span_tokens=10)
 
 
 def doc_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:

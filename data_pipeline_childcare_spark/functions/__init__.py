@@ -20,7 +20,6 @@ from data_pipeline_childcare_spark.functions.text import (
     quality_score,
     lang_guess,
     doc_fingerprint,
-    simhash64,
 )
 from data_pipeline_childcare_spark.functions.dates import (
     parse_date_multi,
@@ -43,7 +42,6 @@ __all__ = [
     "quality_score",
     "lang_guess",
     "doc_fingerprint",
-    "simhash64",
     "parse_date_multi",
     "parse_ts_multi",
     "relative_date",

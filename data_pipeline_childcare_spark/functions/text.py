@@ -8,7 +8,7 @@ Re-expresses the reference's string layer (SURVEY.md §2.8):
   - whitespace normalization (多数据源获取数据.py:493-505)
 plus the text-analysis operators mandated for an LLM-data pipeline:
 tokenization, n-grams, quality scoring, language ID, fingerprinting,
-simhash. Everything here compiles into whole-stage codegen — no Python
+SimHash Hamming distance. Everything here compiles into whole-stage codegen — no Python
 in the hot path.
 """
 
@@ -254,35 +254,6 @@ def doc_fingerprint(col: Column | str) -> Column:
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.md5(F.regexp_replace(F.lower(c), r"\s+", " "))
-
-
-def simhash64(col: Column | str, n: int = 3) -> Column:
-    """64-bit SimHash over word n-gram shingles — pure column math.
-
-    Per shingle: xxhash64 → 64 bit votes (+1/-1); sum votes per bit;
-    sign → bit. Near-duplicate docs differ in few bits (Hamming).
-    Implemented with aggregate over the shingle array; no UDF.
-    """
-    shingles = word_ngrams(col, n)
-    hashes = F.transform(shingles, lambda s: F.xxhash64(s))
-    # votes[b] = sum over shingles of (bit b set ? 1 : -1); sign → bit.
-    # The bit index must be a Python int (shiftright takes a literal
-    # numBits), so the 64 bit positions unroll into one expression tree.
-    # NOTE: pyspark derives higher-order-function arity from the Python
-    # lambda's parameter count, so the bit index is bound via a closure
-    # factory, never as a defaulted third lambda parameter.
-    def vote_fn(bit: int):
-        return lambda acc, h: acc + F.when(
-            F.shiftright(h, bit).bitwiseAND(F.lit(1)) == 1, 1
-        ).otherwise(-1)
-
-    out = F.lit(0).cast("long")
-    for b in range(64):
-        vote = F.aggregate(hashes, F.lit(0), vote_fn(b))
-        out = out.bitwiseOR(
-            F.when(vote > 0, F.shiftleft(F.lit(1).cast("long"), b)).otherwise(F.lit(0).cast("long"))
-        )
-    return out
 
 
 def hamming64(a: Column, b: Column) -> Column:

@@ -127,8 +127,11 @@ RELIABLE_CKPT_DIR_CONF = "spark.graft.checkpoint.dir"
 
 
 def resilient_checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
-    """Lineage cut for ITERATIVE loops (pagerank, connected
-    components, the ER registry) with a deployment escape hatch.
+    """The package's one lineage cut / materialization primitive —
+    iterative loops (graph, ANN, tokenizer training), shared
+    signature frames (dedup) and ER token sets all go through it — with
+    a deployment escape hatch. ``tests/test_checkpoint_mode.py`` fails
+    if ``.localCheckpoint(`` appears anywhere else in the package.
 
     Default: executor-local ``localCheckpoint`` — the fast path, but
     its blocks live on executors and the truncated lineage is

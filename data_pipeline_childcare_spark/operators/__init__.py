@@ -32,10 +32,9 @@ from data_pipeline_childcare_spark.operators.cleaning import (
 from data_pipeline_childcare_spark.operators.dedup import (
     dedup_exact,
     dedup_fingerprint,
-    minhash_signatures,
-    lsh_candidate_pairs,
-    minhash_dedup,
-    simhash_near_dup_pairs,
+    minhash_est_pairs_portable,
+    minhash_dedup_portable,
+    simhash_pairs_portable,
     ngram_jaccard_pairs,
     winnowing_fingerprints,
 )
@@ -94,10 +93,9 @@ __all__ = [
     "truncate_content",
     "dedup_exact",
     "dedup_fingerprint",
-    "minhash_signatures",
-    "lsh_candidate_pairs",
-    "minhash_dedup",
-    "simhash_near_dup_pairs",
+    "minhash_est_pairs_portable",
+    "minhash_dedup_portable",
+    "simhash_pairs_portable",
     "ngram_jaccard_pairs",
     "cosine_topk_bruteforce",
     "lsh_cosine_topk",

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_pipeline_childcare_spark.functions.text import tokenize
-from data_pipeline_childcare_spark.io import spread_partitions
+from data_pipeline_childcare_spark.io import resilient_checkpoint, spread_partitions
 
 MARKER = "\x01"
 
@@ -72,7 +72,6 @@ def learn_bpe_merges(
     n_merges: int = 6,
     id_col: str = "doc_id",
     text_col: str = "text",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Learn the top ``n_merges`` BPE merges over the corpus →
     (round, left, right, merged, pair_count), one row per merge in
@@ -80,14 +79,12 @@ def learn_bpe_merges(
     iteration discipline (kmeans/MMR style) so a SQL twin replays the
     identical trajectory.
 
-    ``checkpoint=True`` (default) eagerly localCheckpoints the vocab
-    state and the one-row argmax each round — without the cut, round
-    k's lineage re-derives rounds 1..k−1 (O(k²) work, and Catalyst
-    re-analyzes the deepening tree per round: un-checkpointed k=20
-    did not finish in 9 minutes where checkpointed k=20 runs in
-    seconds). Same executor-local-blocks caveat as ``mmr_select``.
-    ``checkpoint=False`` keeps the pure lazily-built plan the SQL
-    oracle mirrors — use it only at oracle-scale k."""
+    The vocab state and the one-row argmax are eagerly checkpointed
+    (:func:`io.resilient_checkpoint`) each round — without the cut,
+    round k's lineage re-derives rounds 1..k−1 (O(k²) work, and
+    Catalyst re-analyzes the deepening tree per round: un-checkpointed
+    k=20 did not finish in 9 minutes where checkpointed k=20 runs in
+    seconds)."""
     state = _initial_vocab(docs, id_col, text_col)
     bests = []
     for rnd in range(1, n_merges + 1):
@@ -101,8 +98,7 @@ def learn_bpe_merges(
             .limit(1)
             .select(F.col("p").alias("_bp"), F.col("c").alias("_bc"))
         )
-        if checkpoint:
-            best = best.localCheckpoint(eager=True)
+        best = resilient_checkpoint(best, eager=True)
         bests.append(
             best.select(
                 F.lit(rnd).cast("int").alias("round"),
@@ -125,8 +121,7 @@ def learn_bpe_merges(
             state.crossJoin(F.broadcast(best))
             .select("freq", F.replace(F.col("s"), F.col("_bp"), merged_sym).alias("s"))
         )
-        if checkpoint:
-            state = state.localCheckpoint(eager=True)
+        state = resilient_checkpoint(state, eager=True)
     out = bests[0]
     for b in bests[1:]:
         out = out.unionByName(b)
@@ -138,7 +133,6 @@ def bpe_segment_counts(
     n_merges: int = 6,
     id_col: str = "doc_id",
     text_col: str = "text",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Apply the learned merges back to the corpus → per-document
     symbol counts (id, n_words, n_symbols) — the compression
@@ -158,15 +152,13 @@ def bpe_segment_counts(
             .limit(1)
             .select(F.col("p").alias("_bp"))
         )
-        if checkpoint:
-            best = best.localCheckpoint(eager=True)
+        best = resilient_checkpoint(best, eager=True)
         merged_sym = F.replace(F.col("_bp"), F.lit(" " + MARKER), F.lit(""))
         state = (
             state.crossJoin(F.broadcast(best))
             .select("freq", F.replace(F.col("s"), F.col("_bp"), merged_sym).alias("s"))
         )
-        if checkpoint:
-            state = state.localCheckpoint(eager=True)
+        state = resilient_checkpoint(state, eager=True)
     # rebuild the word key from the final symbol sequence (symbols
     # concatenated minus markers/spaces) — avoids threading the word
     # column through every round

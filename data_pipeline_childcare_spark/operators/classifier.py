@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_pipeline_childcare_spark.functions.text import tokenize
-from data_pipeline_childcare_spark.io import spread_partitions
+from data_pipeline_childcare_spark.io import resilient_checkpoint, spread_partitions
 
 
 def linear_text_scores(
@@ -132,7 +132,6 @@ def train_logreg_weights(
     lr: float = 0.5,
     vocab_size: int = 64,
     ndigits: int = 6,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Train the linear bag-of-words filter IN-ENGINE: full-batch
     logistic-regression gradient descent as pure DataFrame ops — the
@@ -152,8 +151,9 @@ def train_logreg_weights(
     errors are pre-rounded to ``ndigits`` and gradients to 8 digits
     before every downstream use, so DuckDB replays the identical
     trajectory; ties in the vocab cut break on (count DESC, token
-    ASC). ``checkpoint`` lazily localCheckpoints the weight frame per
-    iteration (kmeans/BPE lineage discipline).
+    ASC). The feature frame and each iteration's weight frame are
+    lazily checkpointed (:func:`io.resilient_checkpoint`; the BPE
+    lineage discipline).
 
     Returns (token, weight, rank) for the vocab plus one
     ``__bias__`` row (rank 0); rank orders weights DESC then token.
@@ -176,8 +176,7 @@ def train_logreg_weights(
         .groupBy(id_col, "tok")
         .agg(F.count("*").cast("long").alias("cnt"))
     )
-    if checkpoint:
-        feats = feats.localCheckpoint(eager=False)
+    feats = resilient_checkpoint(feats)
     labels = examples.select(F.col(id_col), y.alias("_y"))
     n_docs = examples.count()  # scalar, model metadata
 
@@ -212,8 +211,7 @@ def train_logreg_weights(
                 ).alias("w"),
             )
         )
-        if checkpoint:
-            weights = weights.localCheckpoint(eager=False)
+        weights = resilient_checkpoint(weights)
         # bias gradient: mean error — one scalar per iteration, the
         # same guarded-model-metadata contract as n_docs
         gb = errs.agg(F.round(F.sum("_err") / n_docs, 8).alias("g")).collect()[0]["g"]

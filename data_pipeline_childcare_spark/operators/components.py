@@ -1,11 +1,12 @@
 """Connected components over near-duplicate pair graphs.
 
-``minhash_dedup`` drops a doc that is near-dup of ANY smaller id —
-"connected-component-lite". That under-merges chains (A~B, B~C, but
-A!~C leaves C keyed to B which is gone). The correct cluster id is the
-connected component, computed here by iterative min-label
-propagation — the standard large-graph formulation (alternating
-small/large-star in spirit), expressed entirely as DataFrame joins:
+``minhash_dedup_portable`` drops a doc that is near-dup of ANY
+smaller id — "connected-component-lite". That under-merges chains
+(A~B, B~C, but A!~C leaves C keyed to B which is gone). The correct
+cluster id is the connected component, computed here by iterative
+min-label propagation — the standard large-graph formulation
+(alternating small/large-star in spirit), expressed entirely as
+DataFrame joins:
 
   label(v) ← min(label(v), min over neighbors u of label(u))
 
@@ -33,9 +34,9 @@ def connected_components(
     """(id_a, id_b) edges → (id, component) with component = min member
     id of the connected component.
 
-    Each iteration materializes the label frame with an eager
-    ``localCheckpoint`` — iterative DataFrame loops otherwise grow the
-    lineage (and planning time) linearly with the iteration count.
+    Each iteration materializes the label frame with a
+    ``resilient_checkpoint`` — iterative DataFrame loops otherwise
+    grow the lineage (and planning time) linearly with the iteration count.
     """
     n_part = int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     # dst-keyed layout + LAZY checkpoint (r13): the loop's first join

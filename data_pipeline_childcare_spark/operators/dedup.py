@@ -14,6 +14,10 @@ Five strategies, all shared-nothing and shuffle-disciplined:
                 shingle index (explode + join on shingle + count),
                 NOT an O(n²) cross join.
 
+MinHash, SimHash and winnowing hash with the engine-portable md5 /
+Carter–Wegman family below, so every near-dup result here is
+reproducible bit-exactly by the DuckDB oracles.
+
 At 100 TB: every strategy here is a constant number of shuffles keyed
 by content-derived hashes (uniformly distributed ⇒ no skew), and the
 verification joins only touch candidate pairs.
@@ -21,17 +25,16 @@ verification joins only touch candidate pairs.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_pipeline_childcare_spark.functions.text import (
     doc_fingerprint,
-    simhash64,
     hamming64,
     tokenize,
     word_ngrams,
 )
-from data_pipeline_childcare_spark.io import spread_partitions
+from data_pipeline_childcare_spark.io import resilient_checkpoint, spread_partitions
 
 # Engine-portable hash family (Carter–Wegman universal hashing over
 # the Mersenne prime p = 2^31 - 1): one md5 per shingle gives a 60-bit
@@ -39,8 +42,7 @@ from data_pipeline_childcare_spark.io import spread_partitions
 # derived from a fixed public formula. Every intermediate fits in a
 # signed 64-bit integer (a_i, h < 2^31 ⇒ a_i*h < 2^62), so Spark (ANSI
 # mode) and DuckDB compute it bit-identically with native BIGINT ops —
-# no md5 per family member, which is what makes the portable paths as
-# cheap as the xxhash64 production paths.
+# one md5 per shingle, not one per family member.
 PORTABLE_P = 2147483647
 _CW_MULT_A, _CW_ADD_A = 2654435761, 40503
 _CW_MULT_B, _CW_ADD_B = 2246822519, 3266489917
@@ -72,53 +74,25 @@ def portable_base_hash_sql(col: str) -> str:
     )
 
 
-def _reuse_boundary(df: DataFrame, *key_cols: str) -> DataFrame:
-    """Pin an expensive subtree behind ONE shared materialization so
-    every consumer reads it instead of re-running the subtree.
-
-    Why it is needed (r13, measured): when the input already arrives
-    hash-partitioned on the aggregate key (a keyed ``spread_partitions``
-    or an upstream join), the signature groupBy needs NO exchange of its
-    own — the whole tokenize→hash→aggregate pipeline collapses into the
-    stage downstream of the input's exchange, and each of the 3-4
-    consumers (banding sides, estimate-join sides) re-executes it from
-    the reused INPUT exchange.
-
-    The boundary is a LAZY ``localCheckpoint``: one materialization of
-    the compact aggregate rows (id + signature ≈ tens of bytes) shared
-    by every consumer — including BroadcastExchange builds, which
-    ReuseExchange never serves across differing subtrees — and the
-    checkpoint TRUNCATES the logical plan, so Catalyst analyzes the
-    signature subtree once instead of once per consumer copy (measured
-    at sf0.1: minhash planning alone was 0.7 s with the subtree
-    embedded 4×). The checkpoint scan advertises the input's hash
-    partitioning, so key-aligned downstream aggregates/windows stay
-    exchange-free. An earlier r13 form added an explicit keyed
-    ``repartition`` before the checkpoint (the pre-checkpoint design
-    needed an exchange node for ReuseExchange); with the checkpoint
-    carrying the reuse, that shuffle was pure overhead — removing it
-    measured minhash 0.94→0.81 s, ngram 0.92→0.77 s, outputs
-    identical. ``key_cols`` is kept for call-site documentation of the
-    expected layout (tests/test_plan_contracts.py pins that the
-    boundary actually advertises the key-hash layout).
-
-    AQE caveat (r14, found by the plan-contract pin): with
-    ``spark.sql.adaptive.enabled=true`` the checkpoint's PLAN-time
-    partitioning is UnknownPartitioning (AdaptiveSparkPlan resolves it
-    only at runtime), so keyed consumers re-exchange the compact
-    signature rows once each. The bench/dump sessions run AQE off and
-    keep the exchange-free shape; AQE-on sessions trade that one
-    signature-sized shuffle for runtime re-planning — the boundary's
-    main job (ONE materialization of the expensive aggregate shared by
-    every consumer) holds either way.
-
-    Nothing is reused across invocations: each call builds a fresh
-    RDD that computes from the inputs on first action (lazy, inside
-    the timed region; not CacheManager-registered — a ``.persist()``
-    would serve later identical invocations from memory, cross-run
-    result reuse, wrong for benchmarking)."""
-    del key_cols  # layout documentation only; see docstring
-    return df.localCheckpoint(eager=False)
+# Reuse boundaries. Every pipeline below that consumes its per-doc
+# signature/shingle frame more than once (banding sides, estimate-join
+# sides, df-cap aggregate) puts that frame behind ONE lazy
+# ``resilient_checkpoint``: a single materialization of the compact
+# rows shared by every consumer — BroadcastExchange builds included,
+# which ReuseExchange never serves across differing subtrees. The
+# checkpoint also truncates the logical plan, so Catalyst analyzes the
+# signature subtree once instead of once per consumer (sf0.1: minhash
+# planning alone was 0.7 s with the subtree embedded 4×). Without it,
+# an input already hash-partitioned on the key lets the whole
+# tokenize→hash→aggregate pipeline collapse into the downstream stage,
+# re-run by each consumer. The checkpoint scan advertises the input's
+# key-hash partitioning, so key-aligned aggregates/windows downstream
+# stay exchange-free (pinned by tests/test_plan_contracts.py) — except
+# with AQE on, where its plan-time partitioning is Unknown and keyed
+# consumers re-exchange the compact rows once each; the one shared
+# materialization holds either way. Nothing is reused across
+# invocations (no ``.persist()``, which would register the plan in the
+# CacheManager and serve later identical calls from memory).
 
 
 def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -174,75 +148,6 @@ def dedup_fingerprint(
 # ---------------------------------------------------------------------------
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 64,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """Per-doc MinHash signature: ARRAY<BIGINT> of length num_hashes.
-
-    minhash_i(doc) = min over shingles of mix(xxhash64(shingle), i).
-
-    Shape: explode distinct shingles → hash once per shingle → ONE
-    hash-aggregate with num_hashes ``min`` columns. The mins are
-    map-side combinable and vectorized; the only exchange is the
-    groupBy on doc id. (A transform-over-sequence formulation inlines
-    the shingle array into every one of the 64 hash expressions —
-    ~64× the tokenization work — so the explode/agg shape wins by an
-    order of magnitude.)
-    """
-    shingled = spread_partitions(df, id_col).select(
-        F.col(id_col),
-        F.explode(F.array_distinct(word_ngrams(F.col(text_col), shingle_n))).alias("_s"),
-    ).select(id_col, F.xxhash64("_s").alias("_h"))
-    # expression trees built as SQL strings: one JVM parse per agg
-    # instead of ~4 py4j round-trips per hash — cuts plan-BUILD time
-    # ~10× at num_hashes=64 (the semantics are identical; xxhash64's
-    # int-literal seed types match F.lit's)
-    aggs = [F.expr(f"min(xxhash64(_h, {i})) AS _m{i}") for i in range(num_hashes)]
-    sig_array = F.expr("array(" + ",".join(f"_m{i}" for i in range(num_hashes)) + ")")
-    return shingled.groupBy(id_col).agg(*aggs).select(id_col, sig_array.alias("signature"))
-
-
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    id_col: str = "doc_id",
-    bands: int = 16,
-    rows_per_band: int = 4,
-) -> DataFrame:
-    """Band the signatures and emit candidate pairs sharing any band.
-
-    Shape: explode to (band, band_hash, id) → self-join on
-    (band, band_hash) → distinct pairs with id_a < id_b. The join key is
-    a hash ⇒ uniform; the explode is narrow. This is the only shuffle.
-    """
-    banded = signatures.select(
-        id_col,
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.xxhash64(
-                    F.slice(F.col("signature"), b * rows_per_band + 1, rows_per_band)
-                ),
-            )
-        ).alias("band", "band_hash"),
-    )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
-
-
 def minhash_jaccard_estimate(signatures: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Estimated Jaccard for candidate pairs = fraction of agreeing
     minhash components (zip_with + filter/size)."""
@@ -253,42 +158,6 @@ def minhash_jaccard_estimate(signatures: DataFrame, pairs: DataFrame, id_col: st
     return joined.select(
         "id_a", "id_b", (agree / F.size("sig_a")).alias("est_jaccard")
     )
-
-
-def minhash_dedup(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.8,
-    num_hashes: int = 64,
-    shingle_n: int = 3,
-    bands: int = 16,
-) -> DataFrame:
-    """Near-dedup: LSH candidates → estimated-Jaccard filter → drop the
-    larger id of each surviving pair (connected-component-lite: a doc
-    is dropped if it is near-dup of ANY smaller id).
-
-    Signatures are consumed three times (banding + both sides of the
-    estimate join); the plans are identical subtrees, so the physical
-    planner's ReuseExchange rule serves all three consumers from ONE
-    shuffle of the signature aggregate — the shingle explode/tokenize
-    map work runs exactly once per execution with no persist. (An
-    explicit ``.persist()`` here would also register the plan in the
-    CacheManager for the SESSION's lifetime: every later identical
-    invocation silently reads the cache instead of the input — wrong
-    for benchmarking and a storage leak, r13.)
-    """
-    sigs = _reuse_boundary(
-        minhash_signatures(df, id_col, text_col, num_hashes, shingle_n), id_col
-    )
-    pairs = lsh_candidate_pairs(sigs, id_col, bands, num_hashes // bands)
-    dups = (
-        minhash_jaccard_estimate(sigs, pairs, id_col)
-        .filter(F.col("est_jaccard") >= threshold)
-        .select(F.col("id_b").alias(id_col))
-        .distinct()
-    )
-    return df.join(dups, id_col, "left_anti")
 
 
 def _portable_signatures(
@@ -304,9 +173,7 @@ def _portable_signatures(
     ).select(F.col(id_col), F.expr(portable_base_hash_sql("_s")).alias("_h"))
     # ONE agg expression producing the array directly: 64 separate agg
     # columns + a re-projection cost ~2.5x more analyzer time AND
-    # ~30% more execution than the fused form (measured at sf0.1);
-    # persisting the single array column also keeps the columnar cache
-    # to one builder/reader, like the xxhash64 production path
+    # ~30% more execution than the fused form (measured at sf0.1)
     sig_expr = (
         "array("
         + ",".join(
@@ -348,16 +215,15 @@ def minhash_est_pairs_portable(
 ) -> DataFrame:
     """Engine-portable MinHash pipeline → (id_a, id_b, est_jaccard).
 
-    Same algorithm as ``minhash_dedup``'s candidate+estimate stages,
-    but every hash is reproducible in ANY engine bit-exactly:
+    Shingle → signature → banded self-join → estimate-verify, with
+    every hash reproducible in ANY engine bit-exactly:
 
     - base hash h = first 15 hex chars of ``md5(shingle)`` read as a
       60-bit integer (``conv(...,16,10)`` in Spark ≡
       ``CAST('0x…' AS BIGINT)`` in DuckDB), reduced mod p = 2^31-1;
     - minhash_i(doc) = min over shingles of (a_i*h + b_i) mod p — the
       Carter–Wegman family (``cw_constants``), ONE md5 per shingle
-      plus 64 native integer ops, so the portable path costs the same
-      as the xxhash64 production path;
+      plus 64 native integer ops;
     - band hash = ordered polynomial fold of the 4-component
       signature slice over p (acc = (acc*1000003 + m) mod p) — a
       plain BIGINT join key (keeps the band self-join broadcast/
@@ -368,10 +234,9 @@ def minhash_est_pairs_portable(
     - est_jaccard = agreeing components / num_hashes — a k/64 dyadic
       rational, exact in binary floating point in both engines.
 
-    This makes the FULL banded-LSH pipeline SQL-oracle-checkable;
-    ``minhash_dedup`` (xxhash64) stays the JVM production option.
-    Same shuffle shape as the production path: one groupBy(doc),
-    band-keyed self-join, candidate-only estimate join.
+    This makes the FULL banded-LSH pipeline SQL-oracle-checkable.
+    Shuffle shape: one groupBy(doc), band-keyed self-join,
+    candidate-only estimate join.
 
     ``cap_per_id``: duplicate-saturation guard (the
     :func:`cap_pairs_per_doc` discipline) — a verbatim-copy cluster
@@ -386,11 +251,10 @@ def minhash_est_pairs_portable(
     semantically free).
     """
     rows = num_hashes // bands
-    # no persist: the banding + both estimate-join sides are identical
-    # subtrees — ReuseExchange computes the signature shuffle once per
-    # execution (see minhash_dedup's note on why persist is wrong here)
-    sigs = _reuse_boundary(
-        _portable_signatures(df, id_col, text_col, num_hashes, shingle_n), id_col
+    # reuse boundary (see the module note): the banding and both
+    # estimate-join sides read one materialization of the signatures
+    sigs = resilient_checkpoint(
+        _portable_signatures(df, id_col, text_col, num_hashes, shingle_n)
     )
     banded = _portable_banded(sigs, id_col, bands, rows)
     a, b = banded.alias("a"), banded.alias("b")
@@ -421,10 +285,10 @@ def minhash_dedup_portable(
     bands: int = 16,
     cap_per_id: int | None = None,
 ) -> DataFrame:
-    """``minhash_dedup`` semantics (drop the larger id of each
-    near-dup pair) on the engine-portable hash family, so the kept-doc
-    set itself is SQL-oracle-checkable. Same plan shape as the
-    xxhash64 production path.
+    """Near-dedup on :func:`minhash_est_pairs_portable`'s verified
+    pairs: drop the larger id of each pair (connected-component-lite —
+    a doc is dropped if it is a near-dup of ANY smaller id). The
+    kept-doc set itself is SQL-oracle-checkable.
 
     ``cap_per_id``: one-sided duplicate-saturation guard that is
     SEMANTICALLY FREE for this consumer — the anti-join only asks
@@ -495,9 +359,10 @@ def minhash_dedup_incremental(
     )
     sigs = _portable_signatures(tagged, id_col, text_col, num_hashes, shingle_n)
     tags = tagged.select(id_col, "_new")
-    # no persist: consumers share the signature-join exchange via
-    # ReuseExchange (see minhash_dedup's note on why persist is wrong)
-    sigs = _reuse_boundary(sigs.join(tags, id_col), id_col)
+    # reuse boundary (see the module note): the banding and both
+    # estimate-join sides read one materialization of the tagged
+    # signatures
+    sigs = resilient_checkpoint(sigs.join(tags, id_col))
     banded = _portable_banded(sigs, id_col, bands, rows).join(tags, id_col)
     a = banded.alias("a")
     b = banded.filter(F.col("_new")).alias("b")
@@ -529,94 +394,6 @@ def minhash_dedup_incremental(
 # ---------------------------------------------------------------------------
 
 
-def simhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
-) -> DataFrame:
-    """Per-doc 64-bit SimHash via explode + ONE vectorized aggregate
-    (64 map-side-combinable bit-vote sums), then sign→bit packing.
-    Same output semantics as ``functions.text.simhash64`` but without
-    inlining the shingle pipeline into 64 expression copies."""
-    shingled = spread_partitions(df, id_col).select(
-        F.col(id_col), F.explode(word_ngrams(F.col(text_col), shingle_n)).alias("_s")
-    ).select(id_col, F.xxhash64("_s").alias("_h"))
-    # SQL-string expressions: one JVM parse per vote / one for the
-    # whole 64-bit pack, vs ~6 py4j calls per bit — the plan used to
-    # take longer to BUILD than to run at sf0.1
-    votes = [
-        F.expr(f"sum(CASE WHEN (shiftright(_h, {b}) & 1) = 1 THEN 1 ELSE -1 END) AS _v{b}")
-        for b in range(64)
-    ]
-    pack = " | ".join(
-        f"(CASE WHEN _v{b} > 0 THEN shiftleft(1L, {b}) ELSE 0L END)" for b in range(64)
-    )
-    agged = shingled.groupBy(id_col).agg(*votes)
-    return agged.select(id_col, F.expr(pack).alias("sh"))
-
-
-def simhash_near_dup_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-    shingle_n: int = 3,
-    cap_per_id: int | None = None,
-) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance.
-
-    Blocking: split the 64-bit signature into 4×16-bit sub-bands; with
-    distance ≤ 3 at least one sub-band matches exactly (pigeonhole), so
-    the join is on (band_index, band_value) — never all-pairs.
-
-    ``cap_per_id``: duplicate-saturation guard (see
-    :func:`cap_pairs_per_doc`) — keeps each doc's ``cap_per_id``
-    NEAREST neighbors per pair side (hamming ASC, other-id tiebreak),
-    bounding downstream pair volume to linear in corpus size on
-    verbatim-copy-cluster corpora (which otherwise emit C(c,2) pairs
-    in EVERY matching band). None = exact blocked pair set.
-    PRODUCTION REQUIREMENT at 100 TB on dup-heavy corpora.
-    """
-    # the banded self-join consumes sigs twice — identical subtrees, so
-    # ReuseExchange computes the vote aggregate's shuffle once (see
-    # minhash_dedup's note on why persist is wrong here)
-    sigs = _reuse_boundary(simhash_signatures(df, id_col, text_col, shingle_n), id_col)
-    banded = sigs.select(
-        id_col,
-        "sh",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("sh"), 16 * i).bitwiseAND(F.lit(0xFFFF))
-                    for i in range(4)
-                ]
-            )
-        ).alias("band", "band_val"),
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    # hamming filter BEFORE the distinct: candidates from hot bands are
-    # cut to true near-dups before the dedup shuffle sees them
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            hamming64(F.col("a.sh"), F.col("b.sh")).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
-    if cap_per_id is not None:
-        pairs = cap_pairs_per_doc(pairs, cap_per_id, order_by=[F.asc("hamming")])
-    return pairs
-
-
 def simhash_pairs_portable(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -627,21 +404,26 @@ def simhash_pairs_portable(
 ) -> DataFrame:
     """Engine-portable SimHash near-dup pairs → (id_a, id_b, hamming).
 
-    Same algorithm as ``simhash_near_dup_pairs`` (bit votes → 64-bit
-    signature → 4×16-bit pigeonhole bands → hamming filter), but bit
-    ``b``'s vote is the parity of Carter–Wegman family member b
-    (salt=100 to decorrelate from the minhash family) applied to the
-    md5-derived base hash — ONE md5 per shingle occurrence plus 64
-    native integer ops, reproducible in any engine, so the whole
-    pipeline is SQL-oracle-checkable. The xxhash64 production path
-    stays the JVM variant. Shuffle shape is unchanged: one
-    groupBy(doc) vote aggregate, band-keyed self-join, hamming filter
-    before the distinct.
+    Bit votes → 64-bit signature → 4×16-bit pigeonhole bands →
+    hamming filter. Bit ``b``'s vote is the parity of Carter–Wegman
+    family member b (salt=100 to decorrelate from the minhash family)
+    applied to the md5-derived base hash — ONE md5 per shingle
+    occurrence plus 64 native integer ops, reproducible in any engine,
+    so the whole pipeline is SQL-oracle-checkable.
 
-    ``cap_per_id``: same duplicate-saturation guard as
-    :func:`simhash_near_dup_pairs` (hamming ASC, other-id tiebreak,
-    two row_number windows — SQL-mirrorable). PRODUCTION REQUIREMENT
-    at 100 TB on dup-heavy corpora; None = exact blocked pair set.
+    Blocking: with distance ≤ 3 at least one of the four 16-bit
+    sub-bands matches exactly (pigeonhole), so the self-join is on
+    (band_index, band_value) — never all-pairs. Shuffle shape: one groupBy(doc) vote aggregate,
+    band-keyed self-join, hamming filter before the distinct (hot-band
+    candidates are cut to true near-dups before the dedup shuffle).
+
+    ``cap_per_id``: duplicate-saturation guard (see
+    :func:`cap_pairs_per_doc`) — keeps each doc's ``cap_per_id``
+    NEAREST neighbors per pair side (hamming ASC, other-id tiebreak,
+    two row_number windows — SQL-mirrorable), bounding downstream
+    pair volume to linear in corpus size on verbatim-copy-cluster
+    corpora. PRODUCTION REQUIREMENT at 100 TB on dup-heavy corpora;
+    None = exact blocked pair set.
     """
     shingled = spread_partitions(df, id_col).select(
         F.col(id_col), F.explode(word_ngrams(F.col(text_col), shingle_n)).alias("_s")
@@ -653,9 +435,9 @@ def simhash_pairs_portable(
         f" THEN 1 ELSE -1 END) > 0 THEN shiftleft(1L, {b}) ELSE 0L END)"
         for b, (a, bb) in enumerate(cw_constants(64, salt=100))
     )
-    # no persist: both self-join sides reuse the vote aggregate's
-    # exchange (see minhash_dedup's note on why persist is wrong here)
-    sigs = _reuse_boundary(shingled.groupBy(id_col).agg(F.expr(pack).alias("sh")), id_col)
+    # reuse boundary (see the module note): both self-join sides read
+    # one materialization of the vote aggregate
+    sigs = resilient_checkpoint(shingled.groupBy(id_col).agg(F.expr(pack).alias("sh")))
     banded = sigs.select(
         id_col,
         "sh",
@@ -700,7 +482,6 @@ def winnowing_fingerprints(
     text_col: str = "text",
     k: int = 8,
     window: int = 4,
-    portable_hash: bool = False,
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken):
     hash every character k-gram, slide a window of ``window``
@@ -712,13 +493,11 @@ def winnowing_fingerprints(
 
     Shape: posexplode over a position sequence (narrow, O(len) rows,
     embarrassingly parallel), per-doc window min (one shuffle keyed by
-    doc id), distinct. ``portable_hash=True`` hashes with
-    substr(md5(gram), 1, 8) — bit-identical in any engine, used by the
-    oracle query; the default xxhash64 is the cheap JVM path for
-    production corpora.
+    doc id), distinct. Each gram hashes to substr(md5(gram), 1, 8) —
+    bit-identical in any engine, so the DuckDB oracle reproduces it.
 
     Returns (id, fingerprint) pairs; join on fingerprint for candidate
-    generation exactly like ``lsh_candidate_pairs``.
+    generation.
     """
     s = F.lower(F.col(text_col))
     n_grams = F.length(s) - k + 1
@@ -736,11 +515,7 @@ def winnowing_fingerprints(
             id_col,
             "_ng",
             "_pos",
-            (
-                F.substring(F.md5(F.substring(F.col("_s"), F.col("_pos"), k)), 1, 8)
-                if portable_hash
-                else F.xxhash64(F.substring(F.col("_s"), F.col("_pos"), k))
-            ).alias("_h"),
+            F.substring(F.md5(F.substring(F.col("_s"), F.col("_pos"), k)), 1, 8).alias("_h"),
         )
     )
     from pyspark.sql import Window as W
@@ -806,13 +581,12 @@ def ngram_jaccard_pairs(
         F.size("_sh").cast("long").alias("set_size"),
         F.explode("_sh").alias("_s"),
     ).select(id_col, "set_size", F.xxhash64("_s").alias("shingle"))
-    # boundary keyed on the DOC id: tokenization runs once (in this
-    # exchange's map side, shared by the df-cap aggregate and both
-    # self-join sides via ReuseExchange) while the a-side keeps doc-id
-    # clustering, so the pair aggregate and the per-doc cap window
-    # downstream need no exchange of their own when the b-side
-    # broadcasts
-    shingled = _reuse_boundary(shingled, id_col)
+    # reuse boundary (see the module note): tokenization runs once for
+    # the df-cap aggregate and both self-join sides, and the a-side
+    # keeps its doc-id layout, so the pair aggregate and the per-doc
+    # cap window downstream need no exchange of their own when the
+    # b-side broadcasts
+    shingled = resilient_checkpoint(shingled)
     b_side = shingled
     if max_df is not None:
         # shingles are per-doc distinct, so count(*) per shingle IS the
@@ -1069,7 +843,6 @@ def shared_span_pairs(
     k: int = 5,
     min_span_tokens: int = 10,
     max_df: int | None = None,
-    portable_hash: bool = True,
 ) -> DataFrame:
     """Substring-level duplication: per document pair, the longest run
     of tokens in the lower-id document whose every k-gram also occurs
@@ -1095,9 +868,8 @@ def shared_span_pairs(
     pair fan-out at corpus scale (boilerplate k-grams otherwise pair
     everything with everything).
 
-    ``portable_hash=True`` keys the join on a 16-hex-char (64-bit) md5
-    prefix (engine-portable, DuckDB-oracle-checkable); ``False`` uses
-    xxhash64 (cheaper, production default at scale). 64 bits matter
+    The join key is a 16-hex-char (64-bit) md5 prefix of the shingle
+    (engine-portable, DuckDB-oracle-checkable). 64 bits matter
     here: at corpus scale distinct-shingle counts blow past the ~77k
     birthday bound of a 32-bit key, and a collision manufactures
     phantom span positions between unrelated documents.
@@ -1123,11 +895,7 @@ def shared_span_pairs(
     ).select(
         id_col,
         "_pos",
-        (
-            F.substring(F.md5(F.col("_s")), 1, 16)
-            if portable_hash
-            else F.xxhash64(F.col("_s")).cast("string")
-        ).alias("_h"),
+        F.substring(F.md5(F.col("_s")), 1, 16).alias("_h"),
     )
     if max_df is not None:
         hot = (
@@ -1212,13 +980,12 @@ def ngram_jaccard_pairs_prefix(
         F.size("_sh").cast("long").alias("set_size"),
         F.explode("_sh").alias("_s"),
     ).select(id_col, "set_size", F.xxhash64("_s").alias("shingle"))
-    # boundary keyed on the DOC id: tokenization runs once (in this
-    # exchange's map side, shared by the df-cap aggregate and both
-    # self-join sides via ReuseExchange) while the a-side keeps doc-id
-    # clustering, so the pair aggregate and the per-doc cap window
-    # downstream need no exchange of their own when the b-side
-    # broadcasts
-    shingled = _reuse_boundary(shingled, id_col)
+    # reuse boundary (see the module note): tokenization runs once for
+    # the df-cap aggregate and both self-join sides, and the a-side
+    # keeps its doc-id layout, so the pair aggregate and the per-doc
+    # cap window downstream need no exchange of their own when the
+    # b-side broadcasts
+    shingled = resilient_checkpoint(shingled)
     if max_df is not None:
         hot = (
             shingled.groupBy("shingle")
@@ -1341,13 +1108,12 @@ def ngram_containment_pairs(
         F.size("_sh").cast("long").alias("set_size"),
         F.explode("_sh").alias("_s"),
     ).select(id_col, "set_size", F.xxhash64("_s").alias("shingle"))
-    # boundary keyed on the DOC id: tokenization runs once (in this
-    # exchange's map side, shared by the df-cap aggregate and both
-    # self-join sides via ReuseExchange) while the a-side keeps doc-id
-    # clustering, so the pair aggregate and the per-doc cap window
-    # downstream need no exchange of their own when the b-side
-    # broadcasts
-    shingled = _reuse_boundary(shingled, id_col)
+    # reuse boundary (see the module note): tokenization runs once for
+    # the df-cap aggregate and both self-join sides, and the a-side
+    # keeps its doc-id layout, so the pair aggregate and the per-doc
+    # cap window downstream need no exchange of their own when the
+    # b-side broadcasts
+    shingled = resilient_checkpoint(shingled)
     b_side = shingled
     if max_df is not None:
         # b-side-only anti-join: the inner join's shingle equality makes

@@ -27,11 +27,11 @@ Design — fixed-point INTEGER arithmetic, not floats:
 - Dangling mass (nodes with no out-edges) is a ONE-ROW aggregate
   broadcast back into the update — the standard correction, kept as a
   cross-join of a single row, never a skewed key.
-- Per-iteration eager ``localCheckpoint`` cuts lineage: iterative
+- A per-iteration ``io.resilient_checkpoint`` cuts lineage: iterative
   DataFrame loops otherwise re-derive every predecessor through
   lineage and planning time grows super-linearly with iterations
   (same failure mode measured for un-checkpointed BPE merges,
-  operators/bpe.py:125).
+  operators/bpe.py).
 """
 
 from __future__ import annotations
@@ -53,7 +53,6 @@ def pagerank(
     id_col: str = "id",
     src_col: str = "src",
     dst_col: str = "dst",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Fixed-point PageRank.
 
@@ -75,18 +74,17 @@ def pagerank(
     base = nodes.join(deg, nodes.id == deg.src, "left").select(
         "id", F.coalesce(F.col("out_deg"), F.lit(0)).alias("out_deg")
     )
-    if checkpoint:
-        # r13: keyed layouts + LAZY checkpoints. With edges partitioned
-        # on src and every rank frame on id, BOTH loop joins
-        # (edges.src = ranks.id and ranks.id = contribs.dst) are
-        # exchange-free — the only shuffle per iteration is the
-        # groupBy(dst). Lazy checkpoints still truncate the logical
-        # plan immediately (planning stays flat in n_iter) but stop
-        # paying one eager materialization job per frame: the next
-        # consumer computes the blocks in its own job.
-        n_part = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        base = resilient_checkpoint(base.repartition(n_part, F.col("id")))
-        edges = resilient_checkpoint(edges.repartition(n_part, F.col("src")))
+    # r13: keyed layouts + LAZY checkpoints. With edges partitioned
+    # on src and every rank frame on id, BOTH loop joins
+    # (edges.src = ranks.id and ranks.id = contribs.dst) are
+    # exchange-free — the only shuffle per iteration is the
+    # groupBy(dst). Lazy checkpoints still truncate the logical
+    # plan immediately (planning stays flat in n_iter) but stop
+    # paying one eager materialization job per frame: the next
+    # consumer computes the blocks in its own job.
+    n_part = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    base = resilient_checkpoint(base.repartition(n_part, F.col("id")))
+    edges = resilient_checkpoint(edges.repartition(n_part, F.col("src")))
 
     nn = base.agg(F.count(F.lit(1)).alias("_n"))
 
@@ -96,8 +94,7 @@ def pagerank(
         F.expr(f"{scale} div _n").alias("rank_scaled"),
         F.col("_n"),
     )
-    if checkpoint:
-        ranks = resilient_checkpoint(ranks)
+    ranks = resilient_checkpoint(ranks)
 
     teleport_pct = 100 - damping_pct
     for _ in range(n_iter):
@@ -126,8 +123,7 @@ def pagerank(
                 "_n",
             )
         )
-        if checkpoint:
-            ranks = resilient_checkpoint(ranks)
+        ranks = resilient_checkpoint(ranks)
     return ranks.select("id", "out_deg", "rank_scaled")
 
 
@@ -142,7 +138,6 @@ def weighted_pagerank(
     src_col: str = "src",
     dst_col: str = "dst",
     weight_col: str = "weight",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Fixed-point PageRank over a WEIGHTED graph: a node's mass flows
     to each neighbor in proportion to edge weight instead of uniformly
@@ -206,42 +201,32 @@ def weighted_pagerank(
     nodes = ids.join(
         wdeg.select(F.col("src").alias("id"), "wdeg"), "id", "left"
     ).select("id", F.coalesce(F.col("wdeg"), F.lit(0).cast("long")).alias("wdeg"))
-    if checkpoint:
-        # Eager checkpoints, the pagerank discipline. (eager=False was
-        # measured to still materialize the AQE query stages at
-        # plan-build time, so laziness buys nothing here; builders
-        # composing this operator belong in the plan-build audit's
-        # checkpoint_builders whitelist either way.)
-        # r13: keyed layouts, the pagerank discipline — quant on src
-        # and nodes/ranks on id make both loop joins exchange-free
-        # (only the groupBy(dst) shuffles per iteration)
-        n_part = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        quant = resilient_checkpoint(quant.repartition(n_part, F.col("src")), eager=True)
-        nodes = resilient_checkpoint(nodes.repartition(n_part, F.col("id")), eager=True)
-        # Dangling nodes are known ONCE from the node frame: on
-        # symmetrized input (dst ⊆ src — every TextRank caller) there
-        # are none and the per-iteration dangling aggregate is exactly
-        # 0, so it can be short-circuited to a literal. This removes
-        # the third downstream consumer of `ranks` per iteration (the
-        # round-11 advice): contribs + join-back only, ~2x lineage
-        # fan-out instead of ~3x. Bit-identical — the aggregate it
-        # replaces coalesces an empty sum to 0L. One cheap count on
-        # the already-checkpointed node frame.
-        has_dangling = nodes.filter(F.col("wdeg") == 0).limit(1).count() > 0
-    else:
-        # checkpoint=False keeps plan-build job-free (the zero-job
-        # build audit), so the short-circuit probe is skipped and the
-        # dangling aggregate stays in the loop: unmaterialized lineage
-        # then fans out ~3x per iteration (contribs + dangling +
-        # join-back) — plan size grows ~3^n_iter. Opt out only for
-        # tiny n_iter or behind your own checkpointing.
-        has_dangling = True
+    # Eager checkpoints, the pagerank discipline. (eager=False was
+    # measured to still materialize the AQE query stages at
+    # plan-build time, so laziness buys nothing here; builders
+    # composing this operator belong in the plan-build audit's
+    # checkpoint_builders whitelist either way.)
+    # r13: keyed layouts, the pagerank discipline — quant on src
+    # and nodes/ranks on id make both loop joins exchange-free
+    # (only the groupBy(dst) shuffles per iteration)
+    n_part = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    quant = resilient_checkpoint(quant.repartition(n_part, F.col("src")), eager=True)
+    nodes = resilient_checkpoint(nodes.repartition(n_part, F.col("id")), eager=True)
+    # Dangling nodes are known ONCE from the node frame: on
+    # symmetrized input (dst ⊆ src — every TextRank caller) there
+    # are none and the per-iteration dangling aggregate is exactly
+    # 0, so it can be short-circuited to a literal. This removes
+    # the third downstream consumer of `ranks` per iteration (the
+    # round-11 advice): contribs + join-back only, ~2x lineage
+    # fan-out instead of ~3x. Bit-identical — the aggregate it
+    # replaces coalesces an empty sum to 0L. One cheap count on
+    # the already-checkpointed node frame.
+    has_dangling = nodes.filter(F.col("wdeg") == 0).limit(1).count() > 0
     nn = nodes.agg(F.count(F.lit(1)).alias("_n"))
     ranks = nodes.join(F.broadcast(nn), how="cross").select(
         "id", "wdeg", F.expr(f"{scale} div _n").alias("rank_scaled"), "_n"
     )
-    if checkpoint:
-        ranks = resilient_checkpoint(ranks, eager=True)
+    ranks = resilient_checkpoint(ranks, eager=True)
     teleport_pct = 100 - damping_pct
     for _ in range(n_iter):
         contribs = (
@@ -278,8 +263,7 @@ def weighted_pagerank(
                 "_n",
             )
         )
-        if checkpoint:
-            ranks = resilient_checkpoint(ranks, eager=True)
+        ranks = resilient_checkpoint(ranks, eager=True)
     return ranks.select("id", "wdeg", "rank_scaled")
 
 
@@ -294,7 +278,6 @@ def trustrank(
     src_col: str = "src",
     dst_col: str = "dst",
     seed_col: str = "id",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Seed-personalized PageRank — TrustRank (Gyöngyi, Garcia-Molina
     & Pedersen 2004, "Combating web spam with TrustRank"): teleport
@@ -329,9 +312,8 @@ def trustrank(
             F.coalesce(F.col("_s"), F.lit(False)).alias("is_seed"),
         )
     )
-    if checkpoint:
-        base = resilient_checkpoint(base, eager=True)
-        edges = resilient_checkpoint(edges, eager=True)
+    base = resilient_checkpoint(base, eager=True)
+    edges = resilient_checkpoint(edges, eager=True)
     ns = base.agg(
         F.sum(F.col("is_seed").cast("long")).alias("_ns")
     )
@@ -342,8 +324,7 @@ def trustrank(
         F.expr(f"if(is_seed, {scale} div _ns, 0L)").alias("rank_scaled"),
         "_ns",
     )
-    if checkpoint:
-        ranks = resilient_checkpoint(ranks, eager=True)
+    ranks = resilient_checkpoint(ranks, eager=True)
     teleport_pct = 100 - damping_pct
     for _ in range(n_iter):
         contribs = (
@@ -374,8 +355,7 @@ def trustrank(
                 "_ns",
             )
         )
-        if checkpoint:
-            ranks = resilient_checkpoint(ranks, eager=True)
+        ranks = resilient_checkpoint(ranks, eager=True)
     return ranks.select("id", "out_deg", "is_seed", "rank_scaled")
 
 
@@ -546,7 +526,6 @@ def hits(
     id_col: str = "id",
     src_col: str = "src",
     dst_col: str = "dst",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Fixed-point HITS (Kleinberg 1999): authorities = mass flowing
     IN along edges from hub scores, hubs = mass flowing OUT from
@@ -572,17 +551,15 @@ def hits(
     edges = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     )
-    if checkpoint:
-        nodes = resilient_checkpoint(nodes, eager=True)
-        edges = resilient_checkpoint(edges, eager=True)
+    nodes = resilient_checkpoint(nodes, eager=True)
+    edges = resilient_checkpoint(edges, eager=True)
     nn = nodes.agg(F.count(F.lit(1)).alias("_n"))
     state = nodes.join(F.broadcast(nn), how="cross").select(
         "id",
         F.expr(f"{scale} div _n").alias("hub"),
         F.expr(f"{scale} div _n").alias("auth"),
     )
-    if checkpoint:
-        state = resilient_checkpoint(state, eager=True)
+    state = resilient_checkpoint(state, eager=True)
 
     def _norm(df: DataFrame, col: str) -> DataFrame:
         tot = df.agg(F.sum(col).alias("_t"))
@@ -610,8 +587,7 @@ def hits(
             "id", F.coalesce(F.col("_h"), F.lit(0)).cast("long").alias("hub"), "auth"
         )
         state = _norm(state, "hub")
-        if checkpoint:
-            state = resilient_checkpoint(state, eager=True)
+        state = resilient_checkpoint(state, eager=True)
     return state.select("id", F.col("hub").alias("hub_scaled"), F.col("auth").alias("auth_scaled"))
 
 
@@ -641,7 +617,6 @@ def kcore(
     edges: DataFrame,
     k: int = 4,
     rounds: int = 6,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """k-core decomposition by fixed-round peeling (Seidman 1983 /
     the Batagelj-Zaveršnik bulk variant): symmetrize, then each round
@@ -655,7 +630,7 @@ def kcore(
     monotone, so if round r equals round r−1 the result IS the exact
     k-core; the unit test certifies convergence on the test graph and
     the docstring records the contract. Per round: two semi-joins +
-    one keyed degree aggregate; survivor frames localCheckpoint
+    one keyed degree aggregate; survivor frames are checkpointed
     lazily (the pagerank discipline) so lineage stays linear in
     rounds."""
     sym = (
@@ -667,8 +642,7 @@ def kcore(
         .distinct()
     )
     alive = sym.select(F.col("src").alias("id")).distinct()
-    if checkpoint:
-        alive = resilient_checkpoint(alive)
+    alive = resilient_checkpoint(alive)
     for _ in range(rounds):
         deg = (
             sym.join(alive.select(F.col("id").alias("src")), on="src", how="left_semi")
@@ -677,8 +651,7 @@ def kcore(
             .agg(F.count(F.lit(1)).cast("long").alias("_d"))
         )
         alive = deg.filter(F.col("_d") >= k).select(F.col("src").alias("id"))
-        if checkpoint:
-            alive = resilient_checkpoint(alive)
+        alive = resilient_checkpoint(alive)
     final_deg = (
         sym.join(alive.select(F.col("id").alias("src")), on="src", how="left_semi")
         .join(alive.select(F.col("id").alias("dst")), on="dst", how="left_semi")
@@ -709,7 +682,7 @@ def bfs_distances(
     round changes nothing (converged = every reachable node final).
     Each round is one src-keyed join + one dst-keyed
     map-side-combinable min + a left join back, frames
-    localCheckpoint-ed per round. After k rounds distances ≤ k are
+    checkpointed per round. After k rounds distances ≤ k are
     exact — the documented contract (a node at true depth > max_hops
     is absent from the output), which the SQL oracle mirrors with a
     depth-capped recursion.

@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_pipeline_childcare_spark.functions.text import hamming64
+from data_pipeline_childcare_spark.io import resilient_checkpoint
 
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
@@ -213,7 +214,7 @@ def hamming_near_dup_pairs(
     if max_hamming > 3:
         raise ValueError("4x16-bit blocking is only complete for max_hamming <= 3")
     blocks = [c for c in block_cols if c]
-    # Lazy localCheckpoint on the (id, sig) projection: the self-join's
+    # Lazy checkpoint on the (id, sig) projection: the self-join's
     # broadcast side carries no exchange on the probe path, so WITHOUT
     # the cut the ENTIRE upstream — typically a decode/fingerprint
     # Python chain orders of magnitude costlier than this join —
@@ -226,9 +227,9 @@ def hamming_near_dup_pairs(
     # same within-invocation reuse with no CacheManager registration —
     # a later identical invocation recomputes from its inputs instead
     # of silently reading this run's cache, and GC frees the blocks.
-    sigs = df.select(
-        F.col(id_col), F.col(sig_col), *[F.col(c) for c in blocks]
-    ).localCheckpoint(eager=False)
+    sigs = resilient_checkpoint(
+        df.select(F.col(id_col), F.col(sig_col), *[F.col(c) for c in blocks])
+    )
     banded = sigs.select(
         F.col(id_col),
         F.col(sig_col),

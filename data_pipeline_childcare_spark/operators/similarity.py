@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from data_pipeline_childcare_spark.io import resilient_checkpoint
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -580,7 +582,6 @@ def kmeans_lite(
     iterations: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Few-iteration Lloyd's k-means, MLlib-shaped: the CORPUS stays
     distributed (assign via broadcast-centroid crossJoin + windowed
@@ -596,7 +597,7 @@ def kmeans_lite(
     Why driver-resident centroids: each iteration is ONE aggregate
     job collecting k model-sized rows (guarded: k > 4096 fails
     loudly) and the next iteration's centroids enter the plan as a
-    literal local relation — no unrolled lineage, no localCheckpoint
+    literal local relation — no unrolled lineage, no checkpoint
     stage chains. The previous all-lazy formulation paid
     ``n_callers × iterations`` checkpoint/window micro-stages of pure
     scheduling latency (measured: the sf0.01 ann_recall_audit gate
@@ -609,12 +610,8 @@ def kmeans_lite(
     tests/test_plan_contracts.py's zero-job build audit must sit in
     its ``checkpoint_builders`` whitelist.
 
-    ``checkpoint`` is kept for signature compatibility (the driver
-    loop needs no lineage cut).
-
     Returns (cell INT, centroid ARRAY<DOUBLE>).
     """
-    del checkpoint  # driver-resident loop has no lineage to cut
     if k > 4096:
         raise ValueError(
             f"kmeans_lite k={k} exceeds the 4096 driver-model cap — "
@@ -638,14 +635,14 @@ def kmeans_lite(
             ),
             _MODEL_MEMO[memo_key],
         )
-    # one lazy localCheckpoint of the (id, vec) training projection:
+    # one lazy checkpoint of the (id, vec) training projection:
     # every iteration (and the seed scan) would otherwise re-run the
     # corpus scan + spread exchange — MLlib's KMeans caches its input
     # for exactly this reason. Freed on GC, never CacheManager-
     # registered (no cross-run reuse).
-    train = corpus.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
-    ).localCheckpoint(eager=False)
+    train = resilient_checkpoint(
+        corpus.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col))
+    )
     seed_hash = F.expr(
         f"cast(conv(substring(md5(cast(`{id_col}` as string)), 1, 15), 16, 10) as bigint)"
     )
@@ -1103,7 +1100,7 @@ def mmr_select(
 
     Returns (query_col, id_col, mmr_rank, rel_score, mmr_score).
     """
-    # lazy localCheckpoint on the candidate projection: every greedy
+    # lazy checkpoint on the candidate projection: every greedy
     # step re-reads it (anti-join + similarity join), and without the
     # cut each step would re-run the candidate-generation DAG (e.g. a
     # brute-force top-k crossJoin) from scratch — measured 25× slower
@@ -1113,12 +1110,14 @@ def mmr_select(
     # recomputes from its inputs instead of silently reading this
     # run's cache (cross-run reuse), and the RDD storage is freed on
     # GC — no unpersist bookkeeping.
-    base = cand.select(
-        F.col(query_col),
-        F.col(id_col),
-        F.round(F.col(rel_col), ndigits).alias("_rel"),
-        F.col(vec_col).cast("array<double>").alias("_v"),
-    ).localCheckpoint(eager=False)
+    base = resilient_checkpoint(
+        cand.select(
+            F.col(query_col),
+            F.col(id_col),
+            F.round(F.col(rel_col), ndigits).alias("_rel"),
+            F.col(vec_col).cast("array<double>").alias("_v"),
+        )
+    )
     return _mmr_greedy(base, k, lam, query_col, id_col, ndigits)
 
 
@@ -1181,11 +1180,7 @@ def _mmr_greedy(
         # every earlier step's windows recursively. Eager, so the
         # final checkpoint materializes while base is still cached
         # and the returned plan no longer references base at all.
-        # localCheckpoint blocks are executor-local (not recomputable
-        # after executor loss) — acceptable for this request-scale,
-        # seconds-long selection; a long-lived pipeline stage should
-        # write the selection out instead.
-        sel = sel.unionByName(pick).localCheckpoint(eager=True)
+        sel = resilient_checkpoint(sel.unionByName(pick), eager=True)
     return sel.select(
         query_col,
         id_col,
@@ -1699,7 +1694,6 @@ def pq_codebooks(
     iterations: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    checkpoint: bool = True,
     memo_key=None,
 ) -> DataFrame:
     """Product-quantization codebooks (Jégou et al. 2011, "Product
@@ -1727,7 +1721,6 @@ def pq_codebooks(
     at sf0.01). At 100 TB one samples the training corpus first; the
     codebook frame itself is n_sub·n_codes rows (broadcast everywhere
     downstream)."""
-    del checkpoint  # driver-resident loop has no lineage to cut
     if dim % n_sub:
         raise ValueError(f"dim {dim} not divisible by n_sub {n_sub}")
     if n_sub * n_codes > 4096:
@@ -1789,10 +1782,10 @@ def pq_codebooks(
             )
         ).alias("_b0", "_sv"),
     ).select(F.col(id_col), (F.col("_b0") + 1).alias("block"), "_sv")
-    # lazy localCheckpoint: each Lloyd iteration re-read the corpus
+    # lazy checkpoint: each Lloyd iteration re-read the corpus
     # scan + spread + sub-block explode otherwise (kmeans_lite's
     # training-cache discipline; freed on GC, no cross-run reuse)
-    bcorpus = bcorpus.localCheckpoint(eager=False)
+    bcorpus = resilient_checkpoint(bcorpus)
     for _ in range(iterations):
         assigned = _pq_assign(bcorpus, cents, id_col, n_sub)
         per_pos = assigned.select(
@@ -2383,7 +2376,6 @@ def kcenter_select(
     k: int = 6,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Greedy k-center selection (Gonzalez 1985 farthest-point
     traversal — the 2-approximation for the k-center objective, and
@@ -2401,7 +2393,7 @@ def kcenter_select(
     Scale shape: k corpus passes (inherent to the greedy), each a
     map-only broadcast of ONE new center + a global top-1
     (takeOrdered — no full sort). Only the 1-row pick frames are
-    localCheckpoint'ed (lazily), so lineage stays linear in k and
+    checkpointed (lazily), so lineage stays linear in k and
     nothing corpus-sized is ever materialized. Exactness: the
     distance decomposition shares the oracle's list_dot_product
     association order, so argmax comparisons are bit-identical —
@@ -2418,8 +2410,7 @@ def kcenter_select(
         .limit(1)
         .select(id_col, "_v")
     )
-    if checkpoint:
-        seed = seed.localCheckpoint(eager=False)
+    seed = resilient_checkpoint(seed)
     state = pts.crossJoin(
         F.broadcast(seed.select(F.col("_v").alias("_c")))
     ).select(
@@ -2434,8 +2425,7 @@ def kcenter_select(
     ]
     for r in range(2, k + 1):
         pick = state.orderBy(F.desc("_dmin"), F.col(id_col)).limit(1)
-        if checkpoint:
-            pick = pick.localCheckpoint(eager=False)
+        pick = resilient_checkpoint(pick)
         picks.append(
             pick.select(
                 F.lit(r).alias("round"),

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from data_pipeline_childcare_spark.functions.text import tokenize
-from data_pipeline_childcare_spark.io import spread_partitions
+from data_pipeline_childcare_spark.io import resilient_checkpoint, spread_partitions
 
 
 def tfidf_top_terms(
@@ -310,7 +310,7 @@ def bigram_logprob_scores(
         F.col(id_col), F.explode(F.transform(F.col("_ts"), pair_at)).alias("_pr")
     ).select(F.col(id_col), F.col("_pr._t").alias("_t"), F.col("_pr._next").alias("_next"))
     # the ONE corpus-keyed aggregate; every other count is a sum over
-    # its (distinct-bigram-sized) output. Lazy localCheckpoint: four
+    # its (distinct-bigram-sized) output. Lazy checkpoint: four
     # consumers (bigram/context/unigram/total) would otherwise each
     # re-run the corpus tokenize+explode (measured: 5 parquet scans
     # in the uncut plan — AQE does not surface cross-consumer exchange
@@ -318,11 +318,7 @@ def bigram_logprob_scores(
     # far below corpus size. Checkpoint instead of persist (r13): no
     # CacheManager registration, so a later identical invocation
     # recomputes from its inputs (no cross-run reuse); GC frees it.
-    cnt = (
-        ex.groupBy("_t", "_next")
-        .agg(F.count("*").alias("_c"))
-        .localCheckpoint(eager=False)
-    )
+    cnt = resilient_checkpoint(ex.groupBy("_t", "_next").agg(F.count("*").alias("_c")))
     bg_freq = cnt.filter(F.col("_next").isNotNull()).select(
         F.col("_t").alias("_prev"), F.col("_next").alias("_w"), F.col("_c").alias("_cpw")
     )

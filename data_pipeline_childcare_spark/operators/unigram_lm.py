@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_pipeline_childcare_spark.io import resilient_checkpoint
 from data_pipeline_childcare_spark.operators.wordpiece import (
     _collect_pieces,
     _word_freqs,
@@ -180,13 +181,13 @@ def learn_unigram_lm(
     # The word-frequency vocabulary is consumed by EVERY round's
     # Viterbi job plus the final returned plan — without a cache each
     # of those re-runs the corpus tokenize+aggregate pass (the only
-    # corpus-sized stage here). Lazy localCheckpoint (vocab-sized:
+    # corpus-sized stage here). Lazy checkpoint (vocab-sized:
     # max_word_len-capped distinct words; MEMORY_AND_DISK spills at
     # the extreme; no CacheManager registration, so later identical
     # invocations recompute from inputs — r13). Same for the seed
     # substring counts below, read by the alphabet collect and again
     # by the round-1 cost table.
-    words = _word_freqs(docs, id_col, text_col, max_word_len).localCheckpoint(eager=False)
+    words = resilient_checkpoint(_word_freqs(docs, id_col, text_col, max_word_len))
 
     def _subs_of(plen: int):
         def mk(i):
@@ -205,9 +206,9 @@ def learn_unigram_lm(
             )
         ).alias("piece"),
     )
-    counts = subs.groupBy("piece").agg(
-        F.sum("freq").cast("long").alias("c")
-    ).localCheckpoint(eager=False)
+    counts = resilient_checkpoint(
+        subs.groupBy("piece").agg(F.sum("freq").cast("long").alias("c"))
+    )
 
     # ONE guarded collect per round serves inventory AND costs: the
     # alphabet (all length-1 pieces) plus the top-``vocab_size``
@@ -271,12 +272,11 @@ def learn_unigram_lm(
         segs = _viterbi_segment(words, costs, max_word_len, max_piece_len)
         # checkpointed: the fused inventory collect references the
         # recount twice (length-1 filter + multi top-k) — one Viterbi
-        # execution, not two (lazy local checkpoint, r13)
-        counts = (
+        # execution, not two (lazy checkpoint, r13)
+        counts = resilient_checkpoint(
             segs.select("freq", F.explode("pieces").alias("piece"))
             .groupBy("piece")
             .agg(F.sum("freq").cast("long").alias("c"))
-            .localCheckpoint(eager=False)
         )
         cost_f = _literal_cost_frame(_round_inventory(counts))
 

@@ -33,7 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from data_pipeline_childcare_spark.functions.text import tokenize
-from data_pipeline_childcare_spark.io import spread_partitions
+from data_pipeline_childcare_spark.io import resilient_checkpoint, spread_partitions
 
 _MAX_MODEL_ROWS = 200_000
 
@@ -143,10 +143,10 @@ def learn_wordpiece_vocab(
     """
     # consumed by the alphabet collect, the seed collect, every
     # round's re-segmentation job and the returned plan — cut the one
-    # corpus-sized pass behind a lazy localCheckpoint (vocab-sized
+    # corpus-sized pass behind a lazy checkpoint (vocab-sized
     # result; no CacheManager registration, so a later identical
     # invocation recomputes from its inputs — r13)
-    words = _word_freqs(docs, id_col, text_col, max_word_len).localCheckpoint(eager=False)
+    words = resilient_checkpoint(_word_freqs(docs, id_col, text_col, max_word_len))
 
     # seed: every substring of length 2..max_piece_len, weighted by
     # word freq per occurrence; the alphabet rides along implicitly
@@ -196,11 +196,11 @@ def learn_wordpiece_vocab(
             words, inventory, max_word_len, max_piece_len
         ).select("freq", F.explode("pieces").alias("piece"))
         # checkpointed: read by this round's inventory collect and
-        # again by the next round / the returned frame (lazy local
+        # again by the next round / the returned frame (lazy
         # checkpoint — within-invocation reuse only, r13)
-        counts = segs.groupBy("piece").agg(
-            F.sum("freq").cast("long").alias("c")
-        ).localCheckpoint(eager=False)
+        counts = resilient_checkpoint(
+            segs.groupBy("piece").agg(F.sum("freq").cast("long").alias("c"))
+        )
         multi = counts.filter(F.length("piece") >= 2)
         inventory = alphabet + _collect_pieces(top_multi(multi), "round inventory")
 

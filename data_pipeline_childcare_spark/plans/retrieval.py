@@ -98,7 +98,6 @@ def tuoyu_rule_filter(
     chunks: DataFrame,
     segments: DataFrame,
     rule: RegionalRule,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Flagship query (SURVEY §3.3 sketch):
 
@@ -109,18 +108,17 @@ def tuoyu_rule_filter(
     5. roll up db→document with position-ordered blocks and
        Tuoyu_Questionnaire / Tuoyu_institution classification.
 
-    ``checkpoint`` (default on) LAZILY checkpoints (through
-    :func:`io.resilient_checkpoint`) the parsed narrow projections and
-    the surviving document-id set before the
-    segment semi-join (lazy: plan building must never run jobs —
+    The parsed narrow projections and the surviving document-id set
+    are LAZILY checkpointed (through :func:`io.resilient_checkpoint`)
+    before the segment semi-join (lazy: plan building must never run jobs —
     test_no_driver_actions_while_building_plans; the RDDs materialize
     once at the first action). The kv-parse + gazetteer rule condition are
     multi-megabyte expression trees; without the cut they are embedded
     TWICE in the final plan (once in the semi-join build side, once in
     the segment leg), and plan construction/optimization/serialization
     cost is driver CPU that grows with composition depth, not data.
-    Values are identical either way — the checkpoint only cuts
-    lineage, so oracle hashes are unaffected.
+    The checkpoint only cuts lineage, so oracle hashes are
+    unaffected.
     """
     cond = _rule_condition(rule)
     _FIELDS = ["_loc", "_lvl", "_maj", "_name", "_alias", "_ts"]
@@ -128,26 +126,23 @@ def tuoyu_rule_filter(
     parsed_chunks = extract_rule_fields(
         parse_chunk_records(chunks.dropDuplicates(["chunk_id"]))
     )
-    if checkpoint:
-        # narrow projection (ids + extracted fields) then cut lineage:
-        # downstream the rule condition references plain materialized
-        # columns, so the kv-parse tree can't be inlined per reference
-        parsed_chunks = resilient_checkpoint(parsed_chunks.select(
-            "database_id", "document_id", "record_type", *_FIELDS
-        ))
+    # narrow projection (ids + extracted fields) then cut lineage:
+    # downstream the rule condition references plain materialized
+    # columns, so the kv-parse tree can't be inlined per reference
+    parsed_chunks = resilient_checkpoint(parsed_chunks.select(
+        "database_id", "document_id", "record_type", *_FIELDS
+    ))
     hits = (
         parsed_chunks.filter(cond)
         .select("database_id", "document_id")
         .distinct()
     )
-    if checkpoint:
-        hits = resilient_checkpoint(hits)
+    hits = resilient_checkpoint(hits)
     parsed_segs = extract_rule_fields(parse_chunk_records(segments))
-    if checkpoint:
-        parsed_segs = resilient_checkpoint(parsed_segs.select(
-            "database_id", "document_id", "position", "content",
-            "record_type", *_FIELDS,
-        ))
+    parsed_segs = resilient_checkpoint(parsed_segs.select(
+        "database_id", "document_id", "position", "content",
+        "record_type", *_FIELDS,
+    ))
     seg_checked = (
         parsed_segs
         .join(hits, ["database_id", "document_id"], "left_semi")

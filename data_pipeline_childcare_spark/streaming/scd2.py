@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from data_pipeline_childcare_spark.io import resilient_checkpoint
 from data_pipeline_childcare_spark.operators.scd import scd2_history
 from data_pipeline_childcare_spark.streaming.merge import (
     _complete_versions,
@@ -57,7 +58,7 @@ def streaming_scd2_to_path(
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        batch_df = batch_df.localCheckpoint()
+        batch_df = resilient_checkpoint(batch_df, eager=True)
         stored_obs = _read_state(spark, obs_dir, schema, before_batch=batch_id)
         new_obs = stored_obs.unionByName(batch_df)
         _publish_version(new_obs, obs_dir, batch_id)

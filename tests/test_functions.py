@@ -26,8 +26,6 @@ from data_pipeline_childcare_spark.functions import (
 )
 from data_pipeline_childcare_spark.functions.text import (
     doc_fingerprint,
-    hamming64,
-    simhash64,
     split_record_blocks,
     word_ngrams,
 )
@@ -117,24 +115,6 @@ def test_fingerprint_normalization(spark):
     a = one(spark, doc_fingerprint(F.lit("Hello   World")))
     b = one(spark, doc_fingerprint(F.lit("hello world")))
     assert a == b
-
-
-def test_simhash_properties(spark):
-    df = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog again and again"),
-            (2, "the quick brown fox jumps over the lazy dog again and again"),
-            (3, "completely different words about spark queries and shuffles here"),
-        ],
-        "id long, text string",
-    )
-    rows = df.select("id", simhash64(F.col("text")).alias("sh")).collect()
-    sh = {r["id"]: r["sh"] for r in rows}
-    assert sh[1] == sh[2]  # identical text → identical signature
-    d = df.limit(1).select(
-        hamming64(F.lit(sh[1]).cast("long"), F.lit(sh[3]).cast("long")).alias("d")
-    ).first()["d"]
-    assert d > 10  # unrelated text → far signature
 
 
 def test_lang_fertility_groups(spark):

@@ -13,12 +13,10 @@ from data_pipeline_childcare_spark.operators import (
     cosine_topk_bruteforce,
     dedup_exact,
     dedup_fingerprint,
-    minhash_dedup,
     ngram_jaccard_pairs,
     parent_child_chunk,
     rrf_fuse,
     sessionize,
-    simhash_near_dup_pairs,
     top_k_with_global_dedup,
 )
 from data_pipeline_childcare_spark.operators.cleaning import (
@@ -117,26 +115,6 @@ def test_dedup_exact_keeps_min_id(spark):
     )
     assert {r["doc_id"] for r in dedup_exact(df).collect()} == {2, 9}
     assert {r["doc_id"] for r in dedup_fingerprint(df).collect()} == {2, 9}
-
-
-def test_minhash_dedup_drops_duplicates(spark):
-    base = "spark catalyst tungsten shuffle partition broadcast join aggregate window " * 5
-    df = spark.createDataFrame(
-        [(1, base), (2, base), (3, "totally unrelated short text about nothing")],
-        "doc_id long, text string",
-    )
-    kept = {r["doc_id"] for r in minhash_dedup(df, threshold=0.9).collect()}
-    assert kept == {1, 3}
-
-
-def test_simhash_identical_distance_zero(spark):
-    df = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta eta theta"),
-         (2, "alpha beta gamma delta epsilon zeta eta theta")],
-        "doc_id long, text string",
-    )
-    rows = simhash_near_dup_pairs(df, max_hamming=3).collect()
-    assert len(rows) == 1 and rows[0]["hamming"] == 0
 
 
 def test_ngram_jaccard_exact_value(spark):
@@ -449,16 +427,15 @@ def test_winnowing_shared_substring_guarantee(spark):
         (4, "tiny"),  # shorter than k ⇒ contributes no fingerprints
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    for portable in (False, True):
-        fps = winnowing_fingerprints(df, k=8, window=4, portable_hash=portable)
-        by_doc = {
-            i: {r["fingerprint"] for r in fps.filter(F.col("doc_id") == i).collect()}
-            for i in (1, 2, 3, 4)
-        }
-        # winnowing guarantee: shared substring of len ≥ k+window-1 ⇒ common fp
-        assert by_doc[1] & by_doc[2], portable
-        assert not by_doc[3] & (by_doc[1] | by_doc[2]), portable
-        assert by_doc[4] == set()
+    fps = winnowing_fingerprints(df, k=8, window=4)
+    by_doc = {
+        i: {r["fingerprint"] for r in fps.filter(F.col("doc_id") == i).collect()}
+        for i in (1, 2, 3, 4)
+    }
+    # winnowing guarantee: shared substring of len ≥ k+window-1 ⇒ common fp
+    assert by_doc[1] & by_doc[2]
+    assert not by_doc[3] & (by_doc[1] | by_doc[2])
+    assert by_doc[4] == set()
 
 
 def test_repetition_stats_hand_computed(spark):

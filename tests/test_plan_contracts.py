@@ -463,30 +463,28 @@ def test_salted_sum_engages_and_matches_plain_on_hot_key(spark):
 
 
 def test_reuse_boundary_preserves_keyed_partitioning(spark):
-    """_reuse_boundary's 'downstream aggregates/windows stay
+    """The dedup reuse boundaries' 'downstream aggregates/windows stay
     exchange-free' property depends on the checkpointed frame
     ADVERTISING the key-hash partitioning its input arrived with
-    (r13 advice: key_cols is documentation-only at runtime, so a
-    caller handing it an unkeyed input would silently regress every
-    consumer to a per-consumer exchange). Pin it: the signature
+    (r13 advice: nothing at runtime enforces the layout, so a caller
+    handing an unkeyed input to the boundary would silently regress
+    every consumer to a per-consumer exchange). Pin it: the signature
     boundary must advertise hashpartitioning on the id, and a
     key-aligned downstream aggregate must plan with ZERO exchanges."""
     import data_pipeline_childcare_spark as eng
-    from data_pipeline_childcare_spark.operators.dedup import (
-        _reuse_boundary,
-        minhash_signatures,
-    )
+    from data_pipeline_childcare_spark.io import resilient_checkpoint
+    from data_pipeline_childcare_spark.operators.dedup import _portable_signatures
     from pyspark.sql import functions as F
 
     # under AQE the checkpoint's plan-time partitioning is
     # UnknownPartitioning (AdaptiveSparkPlan hides it until runtime),
     # so the property is pinned under the bench session's AQE-off
     # configuration — the one every committed plan dump and bench
-    # number uses (documented in _reuse_boundary's docstring)
+    # number uses (documented in dedup.py's reuse-boundary note)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         docs = eng.load_table(spark, "documents", SF)
-        sigs = _reuse_boundary(minhash_signatures(docs), "doc_id")
+        sigs = resilient_checkpoint(_portable_signatures(docs, "doc_id", "text", 64, 3))
         part = (
             sigs._jdf.queryExecution().executedPlan().outputPartitioning().toString()
         )
