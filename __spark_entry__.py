@@ -787,18 +787,15 @@ def ann_recall_audit_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     and replays the overlap joins.
 
     The exact frame feeds one count + five overlap joins; without a
-    persist the brute-force top-k chain re-executes six times (each
-    broadcast probe side re-runs its upstream — no ReusedExchange).
-    |queries|·k rows, cached through the session-scoped keyed index
-    cache so repeated audits reuse ONE copy instead of stacking."""
-    from data_pipeline_childcare_spark.operators.similarity import (
-        _model_memo_key,
-        persist_index,
-    )
+    materialization the brute-force top-k chain re-executes six times
+    (each broadcast probe side re-runs its upstream — no
+    ReusedExchange). |queries|·k rows, materialized once per call
+    through ``io.resilient_checkpoint`` (reliable mode covers it;
+    nothing is reused across calls)."""
+    from data_pipeline_childcare_spark.io import resilient_checkpoint
 
-    exact_plan = cosine_topk_embeddings(spark, sf_dir).select("query_id", "vec_id")
-    exact = persist_index(
-        _model_memo_key(exact_plan, "recall-audit-exact", sf_dir), exact_plan
+    exact = resilient_checkpoint(
+        cosine_topk_embeddings(spark, sf_dir).select("query_id", "vec_id")
     )
     methods = [
         ("ivf", ivf_cosine_topk_embeddings),

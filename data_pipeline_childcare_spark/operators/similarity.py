@@ -428,36 +428,9 @@ def embedding_cosine_dedup_ivf(
     # is provably unchanged (see _verbatim_reps).
     centroids = kmeans_lite(df, k=n_cells, iterations=iterations, id_col=id_col, vec_col=vec_col)
     reps, nonreps = _reps_for_dedup(df, id_col, vec_col, ndigits)
-    cents_l = _local_centroid_rows(centroids)
-    if (
-        cents_l is not None
-        and sum(len(c) for _, c in cents_l) <= _LIT_ASSIGN_MAX_DOUBLES
-    ):
-        # literal top-n_assign selection (r14): the multi-assignment
-        # window was the family's last n·k-row hash(id) exchange at
-        # scale (the single-assignment analog moved to
-        # _assign_cells_literal in r13) — the centroid model is
-        # driver-resident, so the crossJoin + row_number collapse into
-        # one map-side projection + explode. Same cells, same order,
-        # same NULL/NaN/±Inf edges (_topn_cells_sql).
-        v_sql = f"cast(`{vec_col}` as array<double>)"
-        assigned = reps.select(id_col, vec_col).select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.explode(
-                F.expr(_topn_cells_sql(cents_l, v_sql, n_assign))
-            ).alias("_p"),
-        ).select(F.col(id_col), F.col(vec_col), F.col("_p.c").alias("cell"))
-    else:
-        scored = reps.select(id_col, vec_col).crossJoin(F.broadcast(centroids)).withColumn(
-            "_sim", cosine(F.col(vec_col).cast("array<double>"), F.col("centroid"))
-        )
-        w = Window.partitionBy(id_col).orderBy(F.desc("_sim"), F.col("cell"))
-        assigned = (
-            scored.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= n_assign)
-            .select(F.col(id_col), F.col(vec_col), "cell")
-        )
+    assigned = _assign_cells(
+        reps.select(id_col, vec_col), centroids, id_col, vec_col, n_assign
+    )
     if occupancy_guard_factor is not None:
         _guard_cell_occupancy(
             assigned, occupancy_guard_factor, "embedding_cosine_dedup_ivf"
@@ -596,9 +569,9 @@ def kmeans_lite(
 
     Why driver-resident centroids: each iteration is ONE aggregate
     job collecting k model-sized rows (guarded: k > 4096 fails
-    loudly) and the next iteration's centroids enter the plan as a
-    literal local relation — no unrolled lineage, no checkpoint
-    stage chains. The previous all-lazy formulation paid
+    loudly) and the next iteration's centroids enter the plan as
+    literals (:func:`_assign_cells`) — no unrolled lineage, no
+    checkpoint stage chains. The previous all-lazy formulation paid
     ``n_callers × iterations`` checkpoint/window micro-stages of pure
     scheduling latency (measured: the sf0.01 ann_recall_audit gate
     row spent 13.5 of its 16 s in that fixed overhead). Centroid
@@ -628,13 +601,15 @@ def kmeans_lite(
     # canonical oracle trajectory is untouched.
     corpus = corpus.filter(F.col(vec_col).isNotNull())
     memo_key = _model_memo_key(corpus, "kmeans", k, iterations, id_col, vec_col)
-    if memo_key is not None and memo_key in _MODEL_MEMO:
+
+    def cent_df(pairs):
         return _attach_local_rows(
-            spark.createDataFrame(
-                _MODEL_MEMO[memo_key], "cell int, centroid array<double>"
-            ),
-            _MODEL_MEMO[memo_key],
+            spark.createDataFrame(pairs, "cell int, centroid array<double>"),
+            pairs,
         )
+
+    if memo_key is not None and memo_key in _MODEL_MEMO:
+        return cent_df(_MODEL_MEMO[memo_key])
     # one lazy checkpoint of the (id, vec) training projection:
     # every iteration (and the seed scan) would otherwise re-run the
     # corpus scan + spread exchange — MLlib's KMeans caches its input
@@ -657,23 +632,11 @@ def kmeans_lite(
         (i + 1, list(r["centroid"]))
         for i, r in enumerate(sorted(seed_rows, key=lambda r: r["_r"]))
     ]
-
-    def cent_df(pairs):
-        return _attach_local_rows(
-            spark.createDataFrame(pairs, "cell int, centroid array<double>"),
-            pairs,
-        )
-
-    if not cents:
-        # empty trainable corpus (no rows, or every vector NULL): the
-        # pre-r13 distributed path completed and returned an empty
-        # model; the driver loop must do the same instead of crashing
-        # on max() over an empty seed set (r13 advice, medium).
-        return cent_df([])
     for _ in range(iterations):
         if not cents:
-            # degenerate update (e.g. all-empty-array vectors explode
-            # to zero rows): no model to refine — stop, return empty
+            # empty trainable corpus (no rows, or every vector NULL) or
+            # a degenerate update (all-empty-array vectors explode to
+            # zero rows): no model to refine — return the empty model
             break
         assigned = _assign_cells(train, cent_df(cents), id_col, vec_col)
         exploded = assigned.select(
@@ -682,31 +645,7 @@ def kmeans_lite(
         per_pos = exploded.groupBy("cell", "pos").agg(
             F.round(F.round(F.sum("v"), 6) / F.count("v"), 6).alias("m")
         )
-        # the (cell, pos, m) rows ARE the new centroids — m is already
-        # the final Spark-rounded value, so collecting them directly
-        # and grouping driver-side skips the second aggregate's
-        # exchange+sort per iteration (bit-identical: no driver math,
-        # only grouping). Gated on k·dim so a huge model keeps the
-        # distributed roll-up instead of a multi-million-row collect.
-        if k * max(len(c) for _, c in cents) <= _LIT_ASSIGN_MAX_DOUBLES:
-            by_cell: dict[int, list] = {}
-            for r in per_pos.collect():
-                by_cell.setdefault(r["cell"], []).append((r["pos"], r["m"]))
-            cents = sorted(
-                (cell, [m for _, m in sorted(pm)])
-                for cell, pm in by_cell.items()
-            )
-        else:
-            new_rows = per_pos.groupBy("cell").agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s["m"],
-                ).alias("centroid")
-            ).collect()
-            cents = sorted(
-                ((r["cell"], list(r["centroid"])) for r in new_rows),
-                key=lambda t: t[0],
-            )
+        cents = _lloyd_update(per_pos, ["cell"], cents)
     if memo_key is not None:
         _model_memo_put(memo_key, cents)
     return cent_df(cents)
@@ -716,6 +655,47 @@ def kmeans_lite(
 # centroid literals. Past this, expression-tree size (SQL parse +
 # analysis) outgrows what the crossJoin+window path costs.
 _LIT_ASSIGN_MAX_DOUBLES = 32768
+
+
+def _literal_side(rows) -> bool:
+    """The ANN family's one literal-or-distributed decision. A model
+    takes the literal side iff its driver-side rows are known
+    (:func:`_local_rows`), non-empty, and hold at most
+    ``_LIT_ASSIGN_MAX_DOUBLES`` doubles; an untagged frame, an empty
+    model or a larger one takes the distributed side (broadcast join +
+    window, or a distributed roll-up), which returns the same rows."""
+    return bool(rows) and sum(len(r[-1]) for r in rows) <= _LIT_ASSIGN_MAX_DOUBLES
+
+
+def _lloyd_update(per_pos: DataFrame, keys: list, model: list) -> list:
+    """One Lloyd step's new model rows ``[(*key, centroid), ...]``,
+    sorted by key, from the per-position means ``(*keys, pos, m)`` of
+    :func:`kmeans_lite` / :func:`pq_codebooks`. ``m`` is already the
+    final Spark-rounded value, so the driver only groups (bit-identical
+    on both sides). Literal side: collect the (key, pos, m) rows and
+    group them driver-side, which skips a second aggregate's
+    exchange+sort per iteration. Distributed side (a huge ``model``):
+    roll each centroid up with collect_list first instead of a
+    multi-million-row collect."""
+    if _literal_side(model):
+        by_key: dict[tuple, list] = {}
+        for r in per_pos.collect():
+            by_key.setdefault(tuple(r[c] for c in keys), []).append(
+                (r["pos"], r["m"])
+            )
+        return sorted(
+            (*key, [m for _, m in sorted(pm)]) for key, pm in by_key.items()
+        )
+    rows = per_pos.groupBy(*keys).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", "m"))),
+            lambda s: s["m"],
+        ).alias("centroid")
+    ).collect()
+    return sorted(
+        ((*(r[c] for c in keys), list(r["centroid"])) for r in rows),
+        key=lambda t: t[:-1],
+    )
 
 
 def _dlit_sql(v: float) -> str:
@@ -743,7 +723,7 @@ def _alit_sql(c) -> str:
     return "array(" + ",".join(_dlit_sql(x) for x in c) + ")"
 
 
-# SQL renderings of _dot/_norm/cosine/_l2sq with the IDENTICAL fold
+# SQL renderings of _dot/_norm with the IDENTICAL fold
 # order, so literal-centroid assignment produces bit-identical doubles
 # to the crossJoin form (one expression string = one parse; building
 # the same tree through F.lit(list) costs one py4j round-trip per
@@ -757,14 +737,6 @@ def _dot_sql2(a: str, b: str) -> str:
 
 def _norm_sql2(a: str) -> str:
     return f"sqrt(aggregate({a}, cast(0.0 as double), (acc, v) -> acc + v * v))"
-
-
-def _cos_sql2(v: str, c: str) -> str:
-    return f"({_dot_sql2(v, c)} / ({_norm_sql2(v)} * {_norm_sql2(c)}))"
-
-
-def _l2sq_sql2(v: str, c: str) -> str:
-    return f"({_dot_sql2(v, v)} - 2.0D * {_dot_sql2(v, c)} + {_dot_sql2(c, c)})"
 
 
 def _dot_py(a, b) -> float | None:
@@ -831,13 +803,12 @@ def _topn_cells_sql(
     n: int,
     coarse: bool = False,
 ) -> str:
-    """Literal top-``n``-nearest-cells selection as ONE expression:
-    per-centroid (cosine, -cell, cell[, coarse]) structs sorted
-    DESCENDING (natural struct order — see the ordering note above)
-    and sliced to the first ``n``. Replaces the crossJoin + per-id
-    row_number window (an n·k-row hash exchange at scale) with a
-    map-side projection — the multi-assignment generalization of
-    :func:`_assign_cells_literal`. ``coarse=True`` adds a ``co``
+    """Literal nearest-cells selection as ONE expression over
+    per-centroid (cosine, -cell, cell[, coarse]) structs, compared in
+    natural struct order (see the ordering note above). For ``n`` = 1
+    without ``coarse`` it is ``greatest(...).c``, the nearest cell;
+    otherwise the structs sorted DESCENDING and sliced to the first
+    ``n``, for the caller to explode. ``coarse=True`` adds a ``co``
     field carrying round(dot(v, centroid), 6) — the IVFADC coarse
     term — computed in the same projection (struct compare never
     reaches it: ``c`` is unique). The input vector and its norm are
@@ -852,7 +823,14 @@ def _topn_cells_sql(
         if coarse:
             body += f", 'co', round({_dot_sql2('_sgv', _alit_sql(c))}, 6)"
         structs.append(f"named_struct({body})")
-    picked = f"slice(sort_array(array({','.join(structs)}), false), 1, {int(n)})"
+    if n == 1 and not coarse:
+        picked = (
+            f"greatest({','.join(structs)}).c"
+            if len(structs) > 1
+            else f"({structs[0]}).c"
+        )
+    else:
+        picked = f"slice(sort_array(array({','.join(structs)}), false), 1, {int(n)})"
     return _bind1_sql(
         vec_sql, "_sgv", _bind1_sql(_norm_sql2("_sgv"), "_sgnv", picked)
     )
@@ -863,83 +841,70 @@ def _attach_local_rows(df: DataFrame, rows) -> DataFrame:
     its driver-side rows so consumers can take the literal-expression
     path without any collect. Why an attribute and not plan
     inspection: PySpark 4.x's ``createDataFrame`` over local python
-    data plans as ``LogicalRDD`` (Scan ExistingRDD), NOT
-    ``LocalRelation`` — the r13 LocalRelation check therefore never
-    matched and every literal-assignment gate silently fell back to
-    the crossJoin/window path (verified in the committed r13/r14
-    before-plans: `_sim` computed against a centroid COLUMN). The rows
+    data plans as ``LogicalRDD`` (Scan ExistingRDD), not
+    ``LocalRelation``, so no plan shape identifies a model. The rows
     already live on the driver (the Lloyd loops are driver-resident);
     the tag just keeps them attached to the handle."""
     df._spark_graft_local_rows = rows
     return df
 
 
-def _local_centroid_rows(centroids: DataFrame):
-    """(cell, centroid) rows IFF the frame is a driver-local model —
-    the :func:`_attach_local_rows` tag (no job, no py4j), or a genuine
-    LocalRelation plan (driver-only collect). None otherwise."""
-    rows = getattr(centroids, "_spark_graft_local_rows", None)
-    if rows is not None:
-        return [(int(cell), list(c)) for cell, c in rows]
-    try:
-        plan = centroids._jdf.queryExecution().optimizedPlan()
-        if plan.getClass().getSimpleName() != "LocalRelation":
-            return None
-    except Exception:
+def _local_rows(model: DataFrame):
+    """The driver-side rows of a model frame — (cell, centroid) from
+    :func:`kmeans_lite`, (block, code, centroid) from
+    :func:`pq_codebooks` — read from the :func:`_attach_local_rows`
+    tag (no job, no py4j). None for an untagged frame, which takes the
+    distributed side."""
+    rows = getattr(model, "_spark_graft_local_rows", None)
+    if rows is None:
         return None
-    return [(r["cell"], list(r["centroid"])) for r in centroids.collect()]
-
-
-def _assign_cells_literal(
-    corpus: DataFrame, cents: list, id_col: str, vec_col: str
-) -> DataFrame:
-    """Nearest-cell assignment as ONE map-side projection over literal
-    centroids — no crossJoin row expansion, no per-id window (which at
-    real scale costs a hash(id) exchange of n·k rows; this shape
-    shuffles nothing).
-
-    Bit-identical to the window form: the per-centroid cosine is the
-    SAME expression over a literal array (identical IEEE fold order,
-    with the centroid norm folded at build time — :func:`_norm_py`),
-    and ``greatest(struct(sim, -cell, cell))`` replicates
-    row_number().over(desc(_sim), cell asc) edge-for-edge under the
-    natural double ordering (NaN first, ±Inf in place, NULL last,
-    ties to the lowest cell — see the ordering note above
-    :func:`_topn_cells_sql`). The vector and its norm are lambda-bound
-    (one evaluation per row, not per centroid)."""
-    structs = [
-        "named_struct('s', "
-        + f"({_dot_sql2('_sgv', _alit_sql(c))} / (_sgnv * {_dlit_sql(_norm_py(c))}))"
-        + f", 'nc', {-int(cell)}, 'c', {int(cell)})"
-        for cell, c in cents
-    ]
-    picked = (
-        f"greatest({','.join(structs)}).c"
-        if len(structs) > 1
-        else f"({structs[0]}).c"
-    )
-    expr = _bind1_sql(
-        f"cast(`{vec_col}` as array<double>)",
-        "_sgv",
-        _bind1_sql(_norm_sql2("_sgv"), "_sgnv", picked),
-    )
-    return corpus.withColumn("cell", F.expr(expr))
+    return [(*map(int, r[:-1]), list(r[-1])) for r in rows]
 
 
 def _assign_cells(
-    corpus: DataFrame, centroids: DataFrame, id_col: str, vec_col: str
+    frame: DataFrame,
+    centroids: DataFrame,
+    key_col: str,
+    vec_col: str,
+    n: int = 1,
+    coarse: bool = False,
 ) -> DataFrame:
-    cents = _local_centroid_rows(centroids)
-    if cents and sum(len(c) for _, c in cents) <= _LIT_ASSIGN_MAX_DOUBLES:
-        return _assign_cells_literal(corpus, cents, id_col, vec_col)
-    scored = corpus.crossJoin(F.broadcast(centroids)).withColumn(
-        "_sim", cosine(F.col(vec_col).cast("array<double>"), F.col("centroid"))
+    """The family's one nearest-cell assignment: ``frame`` + ``cell``,
+    one row per (row, cell) for each row's ``n`` nearest centroids by
+    cosine, ties to the lowest cell — the Lloyd assignment, IVF
+    multi-assignment and query probes. ``coarse=True`` adds
+    ``_coarse`` = round(dot(v, centroid), 6), the IVFADC coarse term.
+
+    Literal side (:func:`_literal_side`): one map-side projection over
+    the centroid literals (:func:`_topn_cells_sql`; an explode for
+    ``n`` > 1) — no crossJoin row expansion and no per-key window,
+    which at real scale is a hash exchange of n·k rows. Distributed
+    side: broadcast crossJoin + row_number over (desc sim, cell) per
+    ``key_col``. Bit-identical: the per-centroid cosine is the SAME
+    expression over a literal array (identical IEEE fold order), and
+    the struct compare replicates the window order edge-for-edge (NaN
+    first, ±Inf in place, NULL last — the ordering note above
+    :func:`_topn_cells_sql`)."""
+    cents = _local_rows(centroids)
+    keep = frame.columns
+    if _literal_side(cents):
+        sql = _topn_cells_sql(cents, f"cast(`{vec_col}` as array<double>)", n, coarse)
+        if n == 1 and not coarse:
+            return frame.withColumn("cell", F.expr(sql))
+        extra = [F.col("_p.co").alias("_coarse")] if coarse else []
+        return frame.select(*keep, F.explode(F.expr(sql)).alias("_p")).select(
+            *keep, F.col("_p.c").alias("cell"), *extra
+        )
+    vec = F.col(vec_col).cast("array<double>")
+    scored = frame.crossJoin(F.broadcast(centroids)).withColumn(
+        "_sim", cosine(vec, F.col("centroid"))
     )
-    w = Window.partitionBy(id_col).orderBy(F.desc("_sim"), F.col("cell"))
+    w = Window.partitionBy(key_col).orderBy(F.desc("_sim"), F.col("cell"))
+    extra = [F.round(_dot(vec, F.col("centroid")), 6).alias("_coarse")] if coarse else []
     return (
         scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_sim", "centroid")
+        .filter(F.col("_rn") <= n)
+        .select(*keep, "cell", *extra)
     )
 
 
@@ -969,34 +934,7 @@ def ivf_cosine_topk(
     n_cells = _resolve_n_cells(corpus, n_cells, vec_col, "ivf_cosine_topk")
     centroids = kmeans_lite(corpus, n_cells, iterations, id_col, vec_col)
     indexed = _assign_cells(corpus, centroids, id_col, vec_col)
-    cents_l = _local_centroid_rows(centroids)
-    if (
-        cents_l is not None
-        and sum(len(c) for _, c in cents_l) <= _LIT_ASSIGN_MAX_DOUBLES
-    ):
-        # literal top-n_probe probe selection (r14): the centroid model
-        # is driver-resident, so the |Q|·n_cells crossJoin + per-query
-        # row_number window (a hash(query_id) exchange) collapse into
-        # one projection + explode — same cells, same order, same
-        # NULL/NaN/±Inf edges (_topn_cells_sql).
-        qv_sql = f"cast(`{query_vec_col}` as array<double>)"
-        probes = queries.select(
-            F.col(query_id_col),
-            F.col(query_vec_col),
-            F.explode(
-                F.expr(_topn_cells_sql(cents_l, qv_sql, n_probe))
-            ).alias("_p"),
-        ).select(query_id_col, query_vec_col, F.col("_p.c").alias("cell"))
-    else:
-        q_scored = queries.crossJoin(F.broadcast(centroids)).withColumn(
-            "_sim", cosine(F.col(query_vec_col).cast("array<double>"), F.col("centroid"))
-        )
-        wq = Window.partitionBy(query_id_col).orderBy(F.desc("_sim"), F.col("cell"))
-        probes = (
-            q_scored.withColumn("_rn", F.row_number().over(wq))
-            .filter(F.col("_rn") <= n_probe)
-            .select(query_id_col, query_vec_col, "cell")
-        )
+    probes = _assign_cells(queries, centroids, query_id_col, query_vec_col, n_probe)
     cand = indexed.join(F.broadcast(probes), "cell").filter(
         F.col(query_id_col) != F.col(id_col)
     )
@@ -1387,64 +1325,6 @@ def _model_memo_key(df: DataFrame, *params):
     return (app, h, tuple(df.columns), params)
 
 
-# Session-scoped persisted-frame cache for index artifacts (the
-# DataFrame sibling of _MODEL_MEMO): deliberately-left-cached frames
-# (IVF inverted lists, audit reference top-k) are keyed so a repeated
-# build for the SAME key returns the existing cached frame instead of
-# stacking a fresh persisted copy per invocation. Keys lead with
-# applicationId (dead-session entries dropped on insert) and their
-# params lead with a SLOT TAG ("ivfpq-index", "recall-audit-exact").
-# Each slot is a small LRU of capacity _INDEX_SLOT_CAPACITY (round-11
-# advice: a single-entry slot thrashed under interleaved A,B,A,B
-# corpus workloads — every call unpersisted the other corpus's frame
-# and re-ran the full index build): a session alternating over ≤3
-# corpora per family keeps them all warm; past capacity the
-# least-recently-USED frame for that slot is unpersisted and dropped,
-# so the cache stays bounded at 3 copies per index family no matter
-# how many corpora a session iterates over. Insertion order doubles
-# as recency order (hits re-insert).
-_INDEX_CACHE: dict = {}
-_INDEX_SLOT_CAPACITY = 3
-
-
-def _index_slot(key) -> tuple:
-    # (applicationId, slot-tag): params is the 4th key element and its
-    # first entry is the caller's family tag
-    return (key[0], key[3][0] if key[3] else None)
-
-
-def persist_index(key, frame: DataFrame) -> DataFrame:
-    if key is None:  # non-JVM stub frame — keep the old behavior
-        return frame.persist()
-    # slot eviction keys positionally on params[0]; an accidental
-    # non-tag leading param (a number, a shared constant) would
-    # silently cross-evict unrelated families — fail loud instead
-    if not (key[3] and isinstance(key[3][0], str)):
-        raise ValueError(
-            "persist_index keys must lead with a string slot tag, e.g."
-            " _model_memo_key(df, 'my-index', ...)"
-        )
-    if key in _INDEX_CACHE:
-        # LRU touch: dict insertion order is the recency order
-        f = _INDEX_CACHE.pop(key)
-        _INDEX_CACHE[key] = f
-        return f
-    for k in [k for k in _INDEX_CACHE if k[0] != key[0]]:
-        del _INDEX_CACHE[k]
-    slot_peers = [
-        k
-        for k in _INDEX_CACHE
-        if _index_slot(k) == _index_slot(key)
-    ]
-    while len(slot_peers) >= _INDEX_SLOT_CAPACITY:
-        lru = slot_peers.pop(0)  # oldest-inserted = least recently used
-        _INDEX_CACHE[lru].unpersist(blocking=False)
-        del _INDEX_CACHE[lru]
-    f = frame.persist()
-    _INDEX_CACHE[key] = f
-    return f
-
-
 _BUILD_TIME_TRAINING_WARNED: set = set()
 
 
@@ -1486,23 +1366,16 @@ def _model_memo_put(key, value) -> None:
 
 
 def clear_session_caches() -> None:
-    """Drop every cross-invocation cache this module holds: the trained
-    model memo (kmeans/PQ codebooks) and the persisted index-frame LRU
-    (IVF inverted lists, ANN indexes, audit reference frames).
+    """Drop the module's one cross-invocation cache: the trained model
+    memo (kmeans centroids, PQ codebooks).
 
     Benchmark harnesses call this between timed runs so every timed
-    invocation computes from the raw inputs — the index/model memos are
-    a SESSION convenience (a warm service reuses its indexes), but a
-    bench that times run N>1 against a memoized index is measuring
-    probe cost while reporting build+probe (r13 methodology). Library
-    users never need this."""
+    invocation trains from the raw inputs — the memo is a SESSION
+    convenience (a warm service reuses its models), but a bench that
+    times run N>1 against a memoized model is measuring probe cost
+    while reporting build+probe (r13 methodology). Library users never
+    need this."""
     _MODEL_MEMO.clear()
-    for frame in _INDEX_CACHE.values():
-        try:
-            frame.unpersist(blocking=False)
-        except Exception:
-            pass  # session already stopped — nothing to release
-    _INDEX_CACHE.clear()
 
 
 def _l2sq(a: Column, b: Column) -> Column:
@@ -1515,14 +1388,18 @@ def _l2sq(a: Column, b: Column) -> Column:
     return _dot(a, a) - F.lit(2.0) * _dot(a, b) + _dot(b, b)
 
 
-def _codebook_by_block(cents) -> dict:
-    """{block: [(code, centroid), ...]} from (block, code, centroid)
-    triples; empty dict for None."""
+def _literal_codebook(codebooks: DataFrame, n_sub: int) -> dict | None:
+    """``{block: [(code, centroid), ...]}`` when the codebook takes the
+    literal side (:func:`_literal_side`) and every block 1..``n_sub``
+    has entries (each literal expression needs its block's codes);
+    None otherwise."""
+    rows = _local_rows(codebooks)
+    if not _literal_side(rows):
+        return None
     by_block: dict[int, list] = {}
-    if cents is not None:
-        for b, code, c in cents:
-            by_block.setdefault(int(b), []).append((int(code), list(c)))
-    return by_block
+    for b, code, c in rows:
+        by_block.setdefault(b, []).append((code, c))
+    return by_block if all(b in by_block for b in range(1, n_sub + 1)) else None
 
 
 def _block_code_sql(entries: list, sv_sql: str) -> str:
@@ -1586,12 +1463,20 @@ def _lut_flat_sql(
     ``(b−1)·n_codes + code`` (1-based) is ``round(dot(slice(qv, b),
     centroid_{b,code}), 6)`` — exactly the ``_pd`` the broadcast
     (query, block, code) LUT join computed row-by-row, but carried as
-    one array column so candidate scoring is pure element_at math."""
+    one array column so candidate scoring is pure element_at math.
+    A code that lost every member during training is absent from the
+    codebook; its slot holds NULL, so the entries after it keep their
+    positions (no vector is ever assigned that code)."""
     entries = []
     for b in range(1, n_sub + 1):
         sl = f"slice({qv_sql}, {(b - 1) * sub + 1}, {sub})"
-        for code, c in sorted(by_block[b]):
-            entries.append(f"round({_dot_sql2(sl, _alit_sql(c))}, 6)")
+        codes = dict(by_block[b])
+        entries += [
+            f"round({_dot_sql2(sl, _alit_sql(codes[code]))}, 6)"
+            if code in codes
+            else "cast(null as double)"
+            for code in range(1, n_codes + 1)
+        ]
     return "array(" + ",".join(entries) + ")"
 
 
@@ -1610,35 +1495,23 @@ def _adc_sum_sql(n_sub: int, n_codes: int) -> str:
 
 
 def _pq_assign(
-    exploded: DataFrame, codebooks, id_col: str, n_sub: int
+    exploded: DataFrame, codebooks: DataFrame, id_col: str, n_sub: int
 ) -> DataFrame:
     """Per-block nearest-code assignment over an exploded
-    (id, block, _sv) frame → + ``code`` column.
+    (id, block, _sv) frame → + ``code`` column, against a
+    (block, code, centroid) codebook frame.
 
-    ``codebooks`` is either the driver-side triple list
-    [(block, code, centroid), ...] or a (block, code, centroid)
-    DataFrame. When the codebook is driver-local and small, the
-    assignment is ONE projection dispatching on ``block`` over literal
-    centroids (no broadcast join row expansion, no per-(id, block)
-    window — which at real scale is a hash exchange of n·n_codes
-    rows). Bit-identical to the window form: same _l2sq expression
-    over a literal array, and the argmin replicates
-    row_number().over(asc(_d), code asc) edge-for-edge under the
-    natural struct ordering (NULL first, real values including ±Inf
-    in place, NaN last, ties to the lowest code — see the ordering
-    note above :func:`_topn_cells_sql`)."""
-    cents = (
-        codebooks
-        if isinstance(codebooks, list)
-        else _local_codebook_rows(codebooks)
-    )
-    by_block = _codebook_by_block(cents)
-    n_doubles = sum(len(c) for _, codes in by_block.items() for _, c in codes)
-    if (
-        cents
-        and n_doubles <= _LIT_ASSIGN_MAX_DOUBLES
-        and all(b in by_block for b in range(1, n_sub + 1))
-    ):
+    Literal side (:func:`_literal_codebook`): ONE projection
+    dispatching on ``block`` over literal centroids (no broadcast join
+    row expansion, no per-(id, block) window — which at real scale is
+    a hash exchange of n·n_codes rows). Bit-identical to the window
+    form: same _l2sq expression over a literal array, and the argmin
+    replicates row_number().over(asc(_d), code asc) edge-for-edge
+    under the natural struct ordering (NULL first, real values
+    including ±Inf in place, NaN last, ties to the lowest code — see
+    the ordering note above :func:`_topn_cells_sql`)."""
+    by_block = _literal_codebook(codebooks, n_sub)
+    if by_block is not None:
         branches = " ".join(
             "WHEN `block` = {b} THEN {e}".format(
                 b=b,
@@ -1651,14 +1524,7 @@ def _pq_assign(
             for b in range(1, n_sub + 1)
         )
         return exploded.withColumn("code", F.expr(f"CASE {branches} END"))
-    cb_df = (
-        codebooks
-        if not isinstance(codebooks, list)
-        else exploded.sparkSession.createDataFrame(
-            codebooks, "block int, code int, centroid array<double>"
-        )
-    )
-    scored = exploded.join(F.broadcast(cb_df), "block").withColumn(
+    scored = exploded.join(F.broadcast(codebooks), "block").withColumn(
         "_d", _l2sq(F.col("_sv"), F.col("centroid"))
     )
     w = Window.partitionBy(id_col, "block").orderBy(F.asc("_d"), F.col("code"))
@@ -1667,23 +1533,6 @@ def _pq_assign(
         .filter(F.col("_rn") == 1)
         .select(*exploded.columns, "code")
     )
-
-
-def _local_codebook_rows(codebooks: DataFrame):
-    """(block, code, centroid) triples IFF the frame is driver-local
-    (see _local_centroid_rows); None for distributed plans."""
-    rows = getattr(codebooks, "_spark_graft_local_rows", None)
-    if rows is not None:
-        return [(int(b), int(code), list(c)) for b, code, c in rows]
-    try:
-        plan = codebooks._jdf.queryExecution().optimizedPlan()
-        if plan.getClass().getSimpleName() != "LocalRelation":
-            return None
-    except Exception:
-        return None
-    return [
-        (r["block"], r["code"], list(r["centroid"])) for r in codebooks.collect()
-    ]
 
 
 def pq_codebooks(
@@ -1730,23 +1579,26 @@ def pq_codebooks(
         )
     sub = dim // n_sub
     spark = corpus.sparkSession
-    # callers whose training corpus embeds collected literals (the
-    # ivfpq residual frame carries the coarse-centroid local relation,
-    # whose semantic hash is not stable across invocations) pass an
-    # explicit memo_key derived from the RAW corpus + all params
+    # callers whose training corpus has no invocation-stable plan (the
+    # ivfpq residual frame reads a per-call checkpoint, whose semantic
+    # hash differs on every invocation) pass an explicit memo_key
+    # derived from the RAW corpus + all params
     _warn_build_time_training("pq_codebooks")
     if memo_key is None:
         memo_key = _model_memo_key(
             corpus, "pq", dim, n_sub, n_codes, iterations, id_col, vec_col
         )
-    if memo_key is not None and memo_key in _MODEL_MEMO:
+
+    def cent_df(triples):
         return _attach_local_rows(
             spark.createDataFrame(
-                _MODEL_MEMO[memo_key],
-                "block int, code int, centroid array<double>",
+                triples, "block int, code int, centroid array<double>"
             ),
-            _MODEL_MEMO[memo_key],
+            triples,
         )
+
+    if memo_key is not None and memo_key in _MODEL_MEMO:
+        return cent_df(_MODEL_MEMO[memo_key])
     seed_hash = F.expr(
         f"cast(conv(substring(md5(cast(`{id_col}` as string)), 1, 15), 16, 10) as bigint)"
     )
@@ -1762,15 +1614,6 @@ def pq_codebooks(
         for i, r in enumerate(sorted(seed_rows, key=lambda r: r["_r"]))
         for b in range(1, n_sub + 1)
     ]
-
-    def cent_df(triples):
-        return _attach_local_rows(
-            spark.createDataFrame(
-                triples, "block int, code int, centroid array<double>"
-            ),
-            triples,
-        )
-
     bcorpus = corpus.select(
         F.col(id_col),
         F.posexplode(
@@ -1787,37 +1630,13 @@ def pq_codebooks(
     # training-cache discipline; freed on GC, no cross-run reuse)
     bcorpus = resilient_checkpoint(bcorpus)
     for _ in range(iterations):
-        assigned = _pq_assign(bcorpus, cents, id_col, n_sub)
+        assigned = _pq_assign(bcorpus, cent_df(cents), id_col, n_sub)
         per_pos = assigned.select(
             "block", "code", F.posexplode("_sv").alias("pos", "v")
         ).groupBy("block", "code", "pos").agg(
             F.round(F.round(F.sum("v"), 6) / F.count("v"), 6).alias("m")
         )
-        # collect the final (block, code, pos, m) rows and group
-        # driver-side — skips the second aggregate's exchange per
-        # iteration (see kmeans_lite; values unchanged, m is already
-        # the Spark-rounded mean). Same k·dim gate.
-        if n_codes * dim <= _LIT_ASSIGN_MAX_DOUBLES:
-            by_bc: dict[tuple, list] = {}
-            for r in per_pos.collect():
-                by_bc.setdefault((r["block"], r["code"]), []).append(
-                    (r["pos"], r["m"])
-                )
-            cents = sorted(
-                (b, code, [m for _, m in sorted(pm)])
-                for (b, code), pm in by_bc.items()
-            )
-        else:
-            new_rows = per_pos.groupBy("block", "code").agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s["m"],
-                ).alias("centroid")
-            ).collect()
-            cents = sorted(
-                ((r["block"], r["code"], list(r["centroid"])) for r in new_rows),
-                key=lambda t: (t[0], t[1]),
-            )
+        cents = _lloyd_update(per_pos, ["block", "code"], cents)
     if memo_key is not None:
         _model_memo_put(memo_key, cents)
     return cent_df(cents)
@@ -1882,16 +1701,9 @@ def pq_adc_topk(
         corpus, dim, n_sub, n_codes, iterations, id_col, vec_col
     )
     sub = dim // n_sub
-    books_l = _local_codebook_rows(books)
-    by_block = _codebook_by_block(books_l)
+    by_block = _literal_codebook(books, n_sub)
     qv_sql = f"cast(`{query_vec_col}` as array<double>)"
-    lit_ok = (
-        books_l is not None
-        and all(b in by_block for b in range(1, n_sub + 1))
-        and sum(len(c) for bc in by_block.values() for _, c in bc)
-        <= _LIT_ASSIGN_MAX_DOUBLES
-    )
-    if lit_ok:
+    if by_block is not None:
         # fused ADC scoring (r14, same discipline as ivfpq_topk): the
         # codebook is a driver-resident model, so the codes ride as an
         # ARRAY column computed map-side (no (id, block, code) explode)
@@ -2021,22 +1833,15 @@ def ivfpq_topk(
     # the cell assignment IS the IVF index artifact — it feeds both
     # the residual/codes build and the query-time candidate probe, and
     # a broadcast probe side re-executes its upstream chain (no
-    # ReusedExchange), so materialize it once, exactly as a production
-    # IVF build stores its inverted lists; cached through the keyed
-    # index cache (raw-corpus key — cents embeds collected literals,
-    # whose LocalRelation hashes are not invocation-stable) so
-    # repeated builds reuse ONE cached copy instead of stacking
-    indexed = persist_index(
-        _model_memo_key(
-            corpus, "ivfpq-index", n_cells, coarse_iterations, id_col, vec_col
-        ),
-        _assign_cells(corpus, cents, id_col, vec_col),
+    # ReusedExchange), so materialize it once per call, exactly as a
+    # production IVF build stores its inverted lists (nothing is
+    # reused across calls; reliable mode covers it). Only the columns
+    # the index needs: an RDD scan cannot prune the rest.
+    indexed = resilient_checkpoint(
+        _assign_cells(corpus.select(id_col, vec_col), cents, id_col, vec_col)
     )
-    cents_l0 = _local_centroid_rows(cents)
-    if (
-        cents_l0
-        and sum(len(c) for _, c in cents_l0) <= _LIT_ASSIGN_MAX_DOUBLES
-    ):
+    cents_l = _local_rows(cents)
+    if _literal_side(cents_l):
         # literal residual (r14): the centroid model is driver-local,
         # so v − centroid(cell) is one CASE-on-cell projection — the
         # broadcast join existed only to look the centroid up. With
@@ -2045,7 +1850,7 @@ def ivfpq_topk(
         # subtraction over the identical literal arrays, bit-exact.
         case = " ".join(
             f"WHEN `cell` = {int(cell)} THEN {_alit_sql(c)}"
-            for cell, c in cents_l0
+            for cell, c in cents_l
         )
         resid = indexed.select(
             id_col,
@@ -2073,47 +1878,33 @@ def ivfpq_topk(
         ),
     )
     sub = dim // n_sub
-    cents_l = _local_centroid_rows(cents)
-    books_l = _local_codebook_rows(books)
-    by_block = _codebook_by_block(books_l)
+    by_block = _literal_codebook(books, n_sub)
     qv_sql = f"cast(`{query_vec_col}` as array<double>)"
-    lit_ok = (
-        cents_l is not None
-        and books_l is not None
-        and all(b in by_block for b in range(1, n_sub + 1))
-        and sum(len(c) for _, c in cents_l) <= _LIT_ASSIGN_MAX_DOUBLES
-        and sum(len(c) for bc in by_block.values() for _, c in bc)
-        <= _LIT_ASSIGN_MAX_DOUBLES
+    # each query's n_probe nearest cells, with the coarse dot carried
+    # in the same projection on the literal side
+    probes = _assign_cells(
+        queries, cents, query_id_col, query_vec_col, n_probe, coarse=True
     )
-    if lit_ok:
-        # fused probe/score (r14): the coarse quantizer and the
-        # residual codebooks are driver-resident models, so the whole
-        # probe chain collapses into two projections + ONE broadcast
-        # join. (a) probes: literal top-n_probe cell selection with
-        # the coarse dot carried in the same struct, plus the per-query
-        # flattened LUT — no |Q|·n_cells crossJoin, no per-query
-        # window exchange, no qblocks explode, no LUT broadcast join.
-        # (b) candidates: the codes ride as an ARRAY column computed
-        # map-side from the residual (no (id, block, code) explode →
-        # no re-key-by-id SortMergeJoin, no (query, id) groupBy — the
-        # previous chain's two heaviest exchanges), and the ADC sum is
-        # element_at math per candidate row. Values oracle-exact: same
-        # slice/dot/round expressions, and the fixed-order LUT sum of
-        # rounded terms re-rounds to the identical multiple of 1e-6
-        # (see _adc_sum_sql).
-        probes = queries.select(
-            F.col(query_id_col),
+    if by_block is not None:
+        # fused probe/score (r14): the residual codebook is a
+        # driver-resident model, so the probe chain collapses into
+        # two projections + ONE broadcast join. (a) probes carry the
+        # per-query flattened LUT — no qblocks explode, no LUT
+        # broadcast join. (b) candidates: the codes ride as an ARRAY
+        # column computed map-side from the residual (no (id, block,
+        # code) explode → no re-key-by-id SortMergeJoin, no (query,
+        # id) groupBy — the previous chain's two heaviest exchanges),
+        # and the ADC sum is element_at math per candidate row. Values
+        # oracle-exact: same slice/dot/round expressions, and the
+        # fixed-order LUT sum of rounded terms re-rounds to the
+        # identical multiple of 1e-6 (see _adc_sum_sql).
+        probes = probes.select(
+            query_id_col,
+            "cell",
+            "_coarse",
             F.expr(
                 _lut_flat_sql(by_block, qv_sql, n_sub, n_codes, sub)
             ).alias("_lut"),
-            F.explode(
-                F.expr(_topn_cells_sql(cents_l, qv_sql, n_probe, coarse=True))
-            ).alias("_p"),
-        ).select(
-            query_id_col,
-            F.col("_p.c").alias("cell"),
-            F.col("_p.co").alias("_coarse"),
-            "_lut",
         )
         codes_arr = resid.select(
             F.col(id_col),
@@ -2134,21 +1925,6 @@ def ivfpq_topk(
             )
         )
     else:
-        q_scored = queries.crossJoin(F.broadcast(cents)).withColumn(
-            "_sim", cosine(F.col(query_vec_col).cast("array<double>"), F.col("centroid"))
-        )
-        wq = Window.partitionBy(query_id_col).orderBy(F.desc("_sim"), F.col("cell"))
-        probes = (
-            q_scored.withColumn("_rn", F.row_number().over(wq))
-            .filter(F.col("_rn") <= n_probe)
-            .select(
-                query_id_col,
-                "cell",
-                F.round(
-                    _dot(F.col(query_vec_col).cast("array<double>"), F.col("centroid")), 6
-                ).alias("_coarse"),
-            )
-        )
         qblocks_arr = F.array(
             *[
                 F.slice(F.col(query_vec_col).cast("array<double>"), (b - 1) * sub + 1, sub)

@@ -9,6 +9,7 @@ executor in local mode, so the test pins the routing)."""
 
 from __future__ import annotations
 
+import ast
 import glob
 import os
 import pathlib
@@ -114,13 +115,15 @@ def _part_files(ckpt_dir):
 
 def test_dedup_ann_tokenizer_reliable_mode_same_output(spark, reliable):
     """One tiny input each for the dedup (signature boundary), ANN
-    (Lloyd training cache) and tokenizer (per-round vocab cut)
-    families: in reliable mode each writes into the checkpoint dir
-    and returns the same rows as the default local mode."""
+    (Lloyd training cache, ivfpq's per-call index) and tokenizer
+    (per-round vocab cut) families: in reliable mode each writes into
+    the checkpoint dir and returns the same rows as the default local
+    mode."""
     from data_pipeline_childcare_spark.operators.bpe import learn_bpe_merges
     from data_pipeline_childcare_spark.operators.dedup import minhash_dedup_portable
     from data_pipeline_childcare_spark.operators.similarity import (
         clear_session_caches,
+        ivfpq_topk,
         kmeans_lite,
     )
 
@@ -133,9 +136,15 @@ def test_dedup_ann_tokenizer_reliable_mode_same_output(spark, reliable):
         [(i, [float(i % 3), float(i % 5), 1.0]) for i in range(12)],
         "vec_id long, embedding array<double>",
     )
+    queries = vecs.filter(F.col("vec_id") < 2).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
     runs = {
         "minhash_dedup_portable": lambda: minhash_dedup_portable(docs, threshold=0.5),
         "kmeans_lite": lambda: kmeans_lite(vecs, k=3, iterations=2),
+        "ivfpq_topk": lambda: ivfpq_topk(
+            vecs, queries, k=2, n_cells=3, n_probe=2, dim=3, n_sub=1, n_codes=2
+        ),
         "learn_bpe_merges": lambda: learn_bpe_merges(docs, n_merges=3),
     }
 
@@ -151,20 +160,27 @@ def test_dedup_ann_tokenizer_reliable_mode_same_output(spark, reliable):
     spark.conf.set(RELIABLE_CKPT_CONF, "false")
     for name, run in runs.items():
         assert rows(run) == got_reliable[name], name
+    assert len(got_reliable["ivfpq_topk"]) == 4  # k=2 for each of 2 queries
     kept = got_reliable["minhash_dedup_portable"]
     assert len(kept) == 2 and not any("doc_id=2" in r for r in kept), kept
 
 
 def test_no_local_checkpoint_outside_io():
     """``io.resilient_checkpoint`` is the package's only materialization
-    primitive: a direct ``.localCheckpoint(`` call elsewhere would
-    silently ignore reliable mode."""
+    primitive: a direct ``.localCheckpoint(`` / ``.checkpoint(`` call
+    elsewhere would silently ignore reliable mode, and a ``.persist(``
+    / ``.cache(`` would register the plan in the CacheManager and
+    serve later identical calls from memory. Scans call nodes, so
+    prose (a docstring advising ``docs.persist()``) does not count."""
     pkg = pathlib.Path(__file__).resolve().parent.parent / "data_pipeline_childcare_spark"
+    banned = {"localCheckpoint", "checkpoint", "persist", "cache"}
     offenders = [
-        f"{path.relative_to(pkg)}:{n}"
+        f"{path.relative_to(pkg)}:{node.lineno} .{node.func.attr}("
         for path in sorted(pkg.rglob("*.py"))
         if path.name != "io.py" or path.parent != pkg
-        for n, line in enumerate(path.read_text().splitlines(), 1)
-        if ".localCheckpoint(" in line
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in banned
     ]
     assert not offenders, offenders

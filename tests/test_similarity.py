@@ -3,10 +3,14 @@ recall of the LSH-bucketed scale path on real test embeddings."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 import data_pipeline_childcare_spark as eng
+from data_pipeline_childcare_spark.operators import similarity as sim
 from data_pipeline_childcare_spark.operators.similarity import (
     cosine_topk_bruteforce,
     label_centroids,
@@ -557,63 +561,6 @@ def test_semdedup_verbatim_collapse_exact_reconstruction(spark):
     assert collapsed[5][1] is True and collapsed[5][2] is None
 
 
-def test_persist_index_slot_is_bounded_lru(spark):
-    """Round-10/11 advice carry-over: index builds over DIFFERENT
-    corpora must not accumulate persisted frames without bound, and
-    (round 11) a session alternating between two corpora must not
-    thrash — each slot is an LRU of capacity 3: concurrent corpora up
-    to the capacity stay warm; past it the least-recently-used frame
-    is unpersisted and dropped."""
-    from pyspark import StorageLevel
-
-    from data_pipeline_childcare_spark.operators import similarity as sim
-    import data_pipeline_childcare_spark as eng
-    from pyspark.sql import functions as F
-
-    def build(sf, n_cells=4):
-        emb = eng.load_table(spark, "embeddings", sf).withColumn(
-            "embedding", F.col("embedding").cast("array<double>")
-        )
-        q = emb.filter(F.col("vec_id") % 100 == 0).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("query_vec"),
-        )
-        sim.ivfpq_topk(emb, q, k=3, n_cells=n_cells, dim=8, n_sub=2).count()
-
-    app = spark.sparkContext.applicationId
-    slot_keys = lambda: [
-        k for k in sim._INDEX_CACHE
-        if k[0] == app and k[3][0] == "ivfpq-index"
-    ]
-    # Drain entries left by other tests in this session: with the
-    # capacity-3 LRU, prior ivfpq builds survive across tests, and this
-    # test's counts assume a clean slot.
-    for k in slot_keys():
-        sim._INDEX_CACHE.pop(k).unpersist(blocking=False)
-    build("/root/testdata/sf0.001")
-    first = slot_keys()
-    assert len(first) == 1
-    first_frame = sim._INDEX_CACHE[first[0]]
-    build("/root/testdata/sf0.01")  # different corpus, same slot
-    second = slot_keys()
-    # both corpora warm — the interleaved A,B,A,B workload no longer
-    # thrashes (round-11 advice)
-    assert len(second) == 2 and first[0] in second
-    assert first_frame.storageLevel != StorageLevel.NONE
-    # touch the FIRST build again (LRU refresh), then exceed capacity
-    # with two more distinct index keys: the least-recently-used entry
-    # (the sf0.01 build) is the one evicted and unpersisted
-    build("/root/testdata/sf0.001")
-    second_frame = sim._INDEX_CACHE[[k for k in second if k != first[0]][0]]
-    build("/root/testdata/sf0.001", n_cells=5)   # 3rd distinct key
-    assert len(slot_keys()) == 3
-    build("/root/testdata/sf0.001", n_cells=6)   # 4th → evicts LRU
-    after = slot_keys()
-    assert len(after) == 3
-    assert first[0] in after  # recently-touched survivor
-    assert second_frame.storageLevel == StorageLevel.NONE  # LRU evicted
-
-
 def test_null_embedding_rows_survive_collapse(spark):
     """Self-review round 11: the verbatim collapse's vec-keyed join
     silently DROPPED NULL-embedding rows (join keys never match
@@ -652,17 +599,6 @@ def test_null_embedding_rows_survive_collapse(spark):
     # exactly the uncollapsed semantics
     assert sd[3] == (True, None) and sd[4] == (True, None)
     assert sd[1][0] is True and sd[5][0] is True
-
-
-def test_persist_index_rejects_tagless_keys(spark):
-    import pytest
-
-    from data_pipeline_childcare_spark.operators import similarity as sim
-
-    df = spark.range(3)
-    key = sim._model_memo_key(df, 42, "not-leading")  # number leads
-    with pytest.raises(ValueError, match="slot tag"):
-        sim.persist_index(key, df)
 
 
 def test_auto_n_cells_formula():
@@ -753,3 +689,106 @@ def test_ivf_dedup_auto_cells_matches_explicit(spark):
         for r in embedding_cosine_dedup_ivf(emb, threshold=0.4, n_cells=k).collect()
     )
     assert got == want and len(got) > 0
+
+
+# --- both sides of the ANN family's literal/distributed gate ----------
+# Every gated operator runs twice: at the default cap (literal side)
+# and with the cap at 0 (distributed side). Both runs must return the
+# same rows, edges included: the corpus carries NaN, +Inf and
+# NULL-component rows and the queries one NaN query.
+
+_GATE_RUNS = {
+    # name: (run(corpus, queries), Window count of the literal plan —
+    # the final ranking only; None where the output is a driver-built
+    # model, whose gates fire during training)
+    "kmeans_lite": (lambda c, q: sim.kmeans_lite(c, k=4, iterations=2), None),
+    "_assign_cells": (
+        lambda c, q: sim._assign_cells(
+            c, sim.kmeans_lite(c, k=4, iterations=2), "vec_id", "embedding"
+        ),
+        0,
+    ),
+    "ivf_cosine_topk": (
+        lambda c, q: sim.ivf_cosine_topk(c, q, k=3, n_cells=4, n_probe=2),
+        1,
+    ),
+    "embedding_cosine_dedup_ivf": (
+        lambda c, q: sim.embedding_cosine_dedup_ivf(c, n_cells=4, n_assign=2),
+        0,
+    ),
+    "semdedup": (lambda c, q: sim.semdedup(c, n_cells=4), 0),
+    "pq_codebooks": (
+        lambda c, q: sim.pq_codebooks(c, dim=64, n_sub=4, n_codes=4),
+        None,
+    ),
+    "pq_encode": (
+        lambda c, q: sim.pq_encode(
+            c, sim.pq_codebooks(c, dim=64, n_sub=4, n_codes=4), dim=64, n_sub=4
+        ),
+        0,
+    ),
+    "pq_adc_topk": (
+        lambda c, q: sim.pq_adc_topk(c, q, k=3, dim=64, n_sub=4, n_codes=4),
+        1,
+    ),
+    "ivfpq_topk": (
+        lambda c, q: sim.ivfpq_topk(
+            c, q, k=3, n_cells=4, n_probe=2, dim=64, n_sub=4, n_codes=4
+        ),
+        1,
+    ),
+}
+
+
+def _n_windows(df) -> int:
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return len(re.findall(r"(?m)^[\s:+\-]*Window \[", plan))
+
+
+@pytest.mark.parametrize("name", sorted(_GATE_RUNS))
+def test_ann_gate_both_sides_same_rows(spark, monkeypatch, name):
+    run, lit_windows = _GATE_RUNS[name]
+    tail = [0.125] * 63
+    corpus = _emb(spark).select("vec_id", "embedding").unionByName(
+        spark.createDataFrame(
+            [
+                (100001, [float("nan")] + tail),
+                (100002, [float("inf")] + tail),
+                (100003, [None] + tail),
+            ],
+            "vec_id long, embedding array<double>",
+        )
+    )
+    queries = _queries(corpus, 3).unionByName(
+        spark.createDataFrame(
+            [(-1, [float("nan")] + tail)], "query_id long, query_vec array<double>"
+        )
+    )
+    fired = []
+    gate = sim._literal_side
+
+    def spy(rows):
+        fired.append(gate(rows))
+        return fired[-1]
+
+    monkeypatch.setattr(sim, "_literal_side", spy)
+
+    def side():
+        # the model memo would skip training, and with it the gates
+        sim.clear_session_caches()
+        fired.clear()
+        out = run(corpus, queries)
+        return out, list(fired)
+
+    literal, lit_fired = side()
+    monkeypatch.setattr(sim, "_LIT_ASSIGN_MAX_DOUBLES", 0)
+    dist, dist_fired = side()
+    assert lit_fired and set(lit_fired) == {True}, lit_fired
+    assert dist_fired and set(dist_fired) == {False}, dist_fired
+    if lit_windows is not None:
+        # the distributed side adds its assignment/probe windows
+        assert _n_windows(literal) == lit_windows
+        assert _n_windows(dist) > lit_windows
+    assert literal.count() > 0
+    # exceptAll both ways, in one job (shared subtrees reuse exchanges)
+    assert literal.exceptAll(dist).unionByName(dist.exceptAll(literal)).count() == 0

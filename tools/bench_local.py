@@ -12,7 +12,7 @@ Writes one JSON file shaped like bench.py's line ({"queries": {...},
 "total": N, "sf": 0.1}) — commit the r{N} dump and compare in README.
 
 r13 methodology change (matches bench.py's): the base-table pre-cache
-is gone and the similarity model/index memos are cleared before every
+is gone and the similarity model memo is cleared before every
 timed invocation — each timed run computes from the parquet inputs,
 so ANN rows now report build+probe (not probe-only against an index a
 previous run left warm). r12-and-earlier dumps are NOT comparable for
@@ -76,7 +76,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     # r13 methodology (matches bench.py): no base-table pre-cache —
     # every timed run scans parquet — and the similarity module's
-    # session-level model/index memos are cleared before EVERY timed
+    # session-level model memo is cleared before EVERY timed
     # invocation, so an ANN row times build+probe from the raw inputs
     # instead of probing an index a previous run left warm (cross-run
     # result reuse). Warm-up still runs once for JIT/codegen.

@@ -148,8 +148,6 @@ def time_queries(spark, sf_dir: str, names: list[str]) -> tuple[dict, dict]:
                 t0 = time.perf_counter()
                 qs[n](spark, sf_dir).count()
                 best[n] = min(best[n], time.perf_counter() - t0)
-    for t in eng.io.TESTDATA_TABLES:
-        entry_mod._t(spark, sf_dir, t).unpersist()
     return {n: round(v, 3) for n, v in best.items()}, shapes
 
 

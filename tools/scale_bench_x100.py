@@ -108,8 +108,6 @@ def time_once(spark, sf_dir: str, names: list[str]) -> tuple[dict, dict]:
         qs[n](spark, sf_dir).count()
         timed[n] = round(time.perf_counter() - t0, 3)
         print(f"  {sf_dir.rsplit('/', 1)[-1]:5s} {n:40s} {timed[n]:8.2f}s", file=sys.stderr)
-    for t in eng.io.TESTDATA_TABLES:
-        entry_mod._t(spark, sf_dir, t).unpersist()
     return timed, shapes
 
 

@@ -325,8 +325,6 @@ def time_once(
             f"  {sf_dir.rsplit('/', 1)[-1]:8s} {n:40s} {timed[n]:8.2f}s",
             file=sys.stderr,
         )
-    for t in eng.io.TESTDATA_TABLES:
-        entry_mod._t(spark, sf_dir, t).unpersist()
     return timed, shapes
 
 
