@@ -4,21 +4,13 @@ Prints ONE JSON line:
   {"metric": "total_query_time", "value": N, "unit": "sec",
    "queries": {...per-query sec...}, "sf": 0.1}
 
-Each query is forced to full execution with a count-style action (the
-driver-facing results are small aggregates; the cost is the scan/
-shuffle, which count() exercises identically). Queries run twice and
-report the better run, so JVM/JIT warm-up doesn't pollute comparisons
-between rounds.
-
-Round-13 methodology fix: earlier rounds cached + materialized every
-base table BEFORE the timed loop, so timed queries read
-InMemoryRelations instead of parquet. That measures operator cost
-only — but it means no timed run ever computed from the parquet
-inputs, which overstates the engine (and hid the scan path from
-optimization entirely). The cache is gone: every timed run now scans
-parquet, so per-query numbers include the real read+spread cost.
-r12-comparable numbers (with the cache) are recorded in
-OPTIMIZATION_r13.md next to the uncached ones.
+Each query is forced to full execution with a count-style action and
+reports the min of 6 samples taken after one untimed warm-up pass
+(``tools/harness.py``: ``min_times``, which states why). Nothing is
+cached before the timed loop, so every timed run scans parquet and
+per-query numbers include the real read+spread cost;
+OPTIMIZATION_r13.md records the older numbers taken over cached base
+tables.
 """
 
 from __future__ import annotations
@@ -26,14 +18,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-import __spark_entry__ as entry_mod
-import data_pipeline_childcare_spark as eng
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+from tools.harness import SF_DIR, min_times, query_jobs, session, sf_of
 
 # headline set: scan-agg, join-heavy, window, as-of, dedup, similarity,
 # text analysis — the shapes that dominate a 100 TB pipeline
@@ -59,67 +47,10 @@ BENCH_QUERIES = [
     "hypertable_rollup_events",
 ]
 
-# 2 timed runs per query per pass × 3 passes over the whole list,
-# reporting the min of the 6 samples. Passes separated in time beat
-# best-of-N back-to-back runs on this box: transient multi-second slow
-# windows (host-level jitter) otherwise swallow ALL of one query's
-# consecutive attempts; a third pass halves the chance a slow window
-# covers every sample of some query.
-RUNS = 2
-PASSES = 3
-
 
 def main() -> None:
-    sf = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in SF_DIR else -1.0
-    # Bench-level sizing, tuned to the benchmark volume (all knobs
-    # point the OTHER way on a real cluster, which is why they are set
-    # here and not in the engine defaults):
-    # - 8 shuffle partitions: every sf0.1 shuffle is well under
-    #   100 MB, so 8 keeps tasks above the ~8 MB that amortizes
-    #   task-launch overhead (at 100 TB: thousands). 16/32 were
-    #   A/B-tested on full bench runs: the difference is inside this
-    #   host's fast/slow-window jitter, so the smaller task count
-    #   stays.
-    # - 512k file splits: the single-file-per-table testdata otherwise
-    #   scans on ONE core (10 MB lineitem < 128 MB default split);
-    #   smaller splits parallelize the scan like DuckDB's row-group
-    #   parallelism (at 100 TB the 128 MB default is already right).
-    # - AQE off: its per-stage stat collection + re-planning is pure
-    #   fixed latency when partitions are pre-sized to the data; the
-    #   engine default keeps it ON because runtime re-planning only
-    #   pays off at real volumes (skew, misestimates).
-    # Larger heap for the bench JVM: the timed loop should measure
-    # operator cost, not GC pauses from the warm-up pass's garbage.
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
-    spark = eng.get_spark(
-        app_name="bench",
-        shuffle_partitions=8,
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": "512k",
-            "spark.sql.adaptive.enabled": "false",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = entry_mod.queries()
-    # Global warm-up: one untimed pass over every query so JIT/codegen
-    # compilation (shared across queries in one JVM) is paid before any
-    # timing starts — otherwise the first queries in the loop absorb
-    # compilation cost that later ones get for free, and the per-query
-    # numbers depend on loop order instead of operator cost.
-    for name in BENCH_QUERIES:
-        qs[name](spark, SF_DIR).count()
-    # Collect warm-up garbage now so no major GC lands mid-timing.
-    spark.sparkContext._jvm.System.gc()
-    time.sleep(1.0)
-    per_query: dict[str, float] = {name: float("inf") for name in BENCH_QUERIES}
-    for _ in range(PASSES):
-        for name in BENCH_QUERIES:
-            fn = qs[name]
-            for _ in range(RUNS):
-                t0 = time.perf_counter()
-                fn(spark, SF_DIR).count()
-                per_query[name] = min(per_query[name], time.perf_counter() - t0)
-    per_query = {k: round(v, 3) for k, v in per_query.items()}
+    spark = session("bench")
+    per_query = min_times(spark, query_jobs(spark, SF_DIR, BENCH_QUERIES))
     total = round(sum(per_query.values()), 3)
     print(
         json.dumps(
@@ -128,7 +59,7 @@ def main() -> None:
                 "value": total,
                 "unit": "sec",
                 "queries": per_query,
-                "sf": sf,
+                "sf": sf_of(SF_DIR),
             }
         )
     )

@@ -884,9 +884,17 @@ def _assign_cells(
     expression over a literal array (identical IEEE fold order), and
     the struct compare replicates the window order edge-for-edge (NaN
     first, ±Inf in place, NULL last — the ordering note above
-    :func:`_topn_cells_sql`)."""
+    :func:`_topn_cells_sql`).
+
+    An empty model (every training vector NULL) has no cell to offer:
+    each row gets one row with a NULL ``cell`` (and ``_coarse``), so a
+    cell equi-join matches nothing while row-preserving consumers keep
+    every input row."""
     cents = _local_rows(centroids)
     keep = frame.columns
+    if cents is not None and not cents:
+        extra = [F.lit(None).cast("double").alias("_coarse")] if coarse else []
+        return frame.select(*keep, F.lit(None).cast("int").alias("cell"), *extra)
     if _literal_side(cents):
         sql = _topn_cells_sql(cents, f"cast(`{vec_col}` as array<double>)", n, coarse)
         if n == 1 and not coarse:
@@ -1579,6 +1587,9 @@ def pq_codebooks(
         )
     sub = dim // n_sub
     spark = corpus.sparkSession
+    # NULL vectors are not trainable input (see kmeans_lite): as a seed
+    # one crashes the seed collect
+    corpus = corpus.filter(F.col(vec_col).isNotNull())
     # callers whose training corpus has no invocation-stable plan (the
     # ivfpq residual frame reads a per-call checkpoint, whose semantic
     # hash differs on every invocation) pass an explicit memo_key
@@ -1630,6 +1641,9 @@ def pq_codebooks(
     # training-cache discipline; freed on GC, no cross-run reuse)
     bcorpus = resilient_checkpoint(bcorpus)
     for _ in range(iterations):
+        if not cents:
+            # empty trainable corpus: no model to refine (kmeans_lite)
+            break
         assigned = _pq_assign(bcorpus, cent_df(cents), id_col, n_sub)
         per_pos = assigned.select(
             "block", "code", F.posexplode("_sv").alias("pos", "v")

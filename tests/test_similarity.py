@@ -570,7 +570,9 @@ def test_null_embedding_rows_survive_collapse(spark):
     every family, kept semantics identical to uncollapsed."""
     from data_pipeline_childcare_spark.operators.similarity import (
         embedding_cosine_dedup,
+        embedding_cosine_dedup_ivf,
         embedding_cosine_dedup_lsh,
+        ivf_cosine_topk,
         semdedup,
     )
 
@@ -599,6 +601,65 @@ def test_null_embedding_rows_survive_collapse(spark):
     # exactly the uncollapsed semantics
     assert sd[3] == (True, None) and sd[4] == (True, None)
     assert sd[1][0] is True and sd[5][0] is True
+
+    # an all-NULL corpus trains an empty model: every family still keeps
+    # one row per input id, and the IVF probe finds no candidates
+    nulls = spark.createDataFrame(
+        [(1, None), (2, None)], "vec_id long, embedding array<double>"
+    )
+    for dedup in (
+        embedding_cosine_dedup(nulls, threshold=0.9),
+        embedding_cosine_dedup_lsh(nulls, dim=2, threshold=0.9),
+        embedding_cosine_dedup_ivf(nulls, n_cells=2, threshold=0.9),
+    ):
+        assert sorted(r.vec_id for r in dedup.collect()) == [1, 2]
+    sd = sorted(
+        (r.vec_id, r.cell, r.kept, r.dup_of)
+        for r in semdedup(nulls, n_cells=2, threshold=0.9).collect()
+    )
+    assert sd == [(1, None, True, None), (2, None, True, None)]
+    q = spark.createDataFrame([(9, [1.0, 0.0])], "query_id long, query_vec array<double>")
+    assert ivf_cosine_topk(nulls, q, k=2, n_cells=2, n_probe=1).count() == 0
+
+
+def _md5_first(ids):
+    """The id that seeds first: smallest md5-prefix hash (kmeans_lite /
+    pq_codebooks seed order)."""
+    import hashlib
+
+    return min(ids, key=lambda i: int(hashlib.md5(str(i).encode()).hexdigest()[:15], 16))
+
+
+def test_pq_codebooks_skip_null_vectors(spark):
+    """A NULL vector among the seed ids trains the same codebooks as the
+    corpus without that row (it crashed the seed step); an all-NULL
+    corpus trains an empty codebook, so the PQ top-k operators return
+    no rows."""
+    emb = _emb(spark).select("vec_id", "embedding")
+    first = _md5_first([r.vec_id for r in emb.select("vec_id").collect()])
+    with_null = emb.withColumn(
+        "embedding",
+        F.when(F.col("vec_id") != first, F.col("embedding")),
+    )
+    without = emb.filter(F.col("vec_id") != first)
+
+    def books(corpus):
+        sim.clear_session_caches()
+        return sorted(
+            (r.block, r.code, list(r.centroid))
+            for r in sim.pq_codebooks(corpus, dim=64, n_sub=4, n_codes=4).collect()
+        )
+
+    assert books(with_null) == books(without)
+
+    nulls = spark.createDataFrame(
+        [(1, None), (2, None)], "vec_id long, embedding array<double>"
+    )
+    q = spark.createDataFrame([(9, [0.125] * 64)], "query_id long, query_vec array<double>")
+    assert sim.pq_adc_topk(nulls, q, k=3, dim=64, n_sub=4, n_codes=4).count() == 0
+    assert sim.ivfpq_topk(
+        nulls, q, k=3, n_cells=2, n_probe=1, dim=64, n_sub=4, n_codes=4
+    ).count() == 0
 
 
 def test_auto_n_cells_formula():

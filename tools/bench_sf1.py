@@ -11,19 +11,16 @@ tools/scale_bench.py, ~1 GB of parquet) where scan-bound queries
 separate by core count and deltas exceed noise.
 
 It is an ADDITIVE tool: bench.py and its driver contract are
-untouched. Methodology matches bench.py (honest, uncached: every
-timed run computes from parquet; warm-up pass for JIT; min of
-RUNS×PASSES samples) and honors the same env contract:
+untouched. Methodology matches bench.py (``tools/harness.py``: honest,
+uncached — every timed run computes from parquet; warm-up pass for
+JIT; min of RUNS×PASSES = 6 samples, where the committed BENCH_SF1_*
+dumps took 4) and honors the same env contract:
 
     SPARK_GRAFT_CPUS=32 python tools/bench_sf1.py --out BENCH_SF1_c32.json
     SPARK_GRAFT_CPUS=8  python tools/bench_sf1.py --out BENCH_SF1_c8.json
 
-Session sizing is scale-adaptive rather than sf0.1-pinned: shuffle
-partitions 64 (data-sized — ~16 MB each at this volume, the
-guide-§2.2 "fewer, larger partitions" rule — and fixed across core
-counts so the c32/c8 ratio varies only the master), scan splits 4 MB
-so each ~100 MB fact file parallelizes across the core count, AQE off
-for plan comparability with the committed dumps.
+Session sizing is the harness's scale-adaptive ``sf1`` profile, not
+the sf0.1-pinned bench one.
 """
 
 from __future__ import annotations
@@ -32,17 +29,12 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as entry_mod
-import data_pipeline_childcare_spark as eng
 from bench import BENCH_QUERIES
-from tools.scale_bench import SCALE_DIR, build_scaled
-
-RUNS = 2
-PASSES = 2
+from tools.harness import PASSES, RUNS, min_times, query_jobs, query_names, session
+from tools.scale_bench import scaled_dir
 
 
 def main() -> None:
@@ -50,44 +42,11 @@ def main() -> None:
     ap.add_argument("--out", default="BENCH_SF1.json")
     ap.add_argument("--queries", default="")
     args = ap.parse_args()
-    names = [q for q in args.queries.split(",") if q] or list(BENCH_QUERIES)
+    names = query_names(args.queries, BENCH_QUERIES)
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
-    # shuffle partitions are DATA-sized, not core-sized (guide §2.2:
-    # partition count follows volume; ~1 GB / 64 ≈ 16 MB per
-    # partition), and deliberately IDENTICAL across core counts so the
-    # c32-vs-c8 comparison varies exactly one thing — the master's
-    # core count, like the driver's own scaling measurement.
-    spark = eng.get_spark(
-        app_name="bench_sf1",
-        shuffle_partitions=64,
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": "4m",
-            "spark.sql.adaptive.enabled": "false",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    if not os.path.isfile(os.path.join(SCALE_DIR, "lineitem.parquet", "_SUCCESS")) and not os.path.isdir(
-        os.path.join(SCALE_DIR, "lineitem.parquet")
-    ):
-        build_scaled(spark)
-    elif not os.path.exists(os.path.join(SCALE_DIR, "embeddings.parquet")):
-        build_scaled(spark)
-
-    qs = entry_mod.queries()
-    for name in names:  # warm-up (JIT/codegen), untimed
-        qs[name](spark, SCALE_DIR).count()
-    spark.sparkContext._jvm.System.gc()
-    time.sleep(1.0)
-    per_query: dict[str, float] = {n: float("inf") for n in names}
-    for _ in range(PASSES):
-        for name in names:
-            for _ in range(RUNS):
-                t0 = time.perf_counter()
-                qs[name](spark, SCALE_DIR).count()
-                per_query[name] = min(per_query[name], time.perf_counter() - t0)
-    per_query = {k: round(v, 3) for k, v in per_query.items()}
+    spark = session("bench_sf1", "sf1")
+    per_query = min_times(spark, query_jobs(spark, scaled_dir(spark, 10), names))
     out = {
         "metric": "sf1_query_time",
         "value": round(sum(per_query.values()), 3),

@@ -1,11 +1,11 @@
 """Dump .explain("formatted") for the bench queries to plans/<tag>/.
 
-Usage: python tools/dump_plans.py <tag> [suffix]
+Usage: python tools/dump_plans.py <tag> [suffix] [q1,q2,...]
   tag    -> plans/<tag>/<query>_<suffix>.txt   (suffix defaults to "before")
 
-Runs with the same session configuration bench.py uses (shuffle
-partitions, split size, AQE off) but WITHOUT caching base tables, so
-the dumped plans show the real scan nodes (PushedFilters/ReadSchema)
+Runs in bench.py's session profile (shuffle partitions, split size,
+AQE off — plan shapes depend on them) but WITHOUT caching base tables,
+so the dumped plans show the real scan nodes (PushedFilters/ReadSchema)
 instead of InMemoryTableScan.
 """
 
@@ -17,31 +17,17 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod
-import data_pipeline_childcare_spark as eng
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 from bench import BENCH_QUERIES
+from tools.harness import REPO, SF_DIR, session
 
 
 def main() -> None:
     tag = sys.argv[1] if len(sys.argv) > 1 else "r13"
     suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
     only = sys.argv[3].split(",") if len(sys.argv) > 3 else None
-    outdir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", tag)
+    outdir = os.path.join(REPO, "plans", tag)
     os.makedirs(outdir, exist_ok=True)
-    spark = eng.get_spark(
-        app_name="dump-plans",
-        # shuffle_partitions must match bench.py: plan shapes depend on
-        # it (e.g. a reuse-boundary repartition keyed like the input
-        # spread is elided as redundant when the counts also coincide)
-        shuffle_partitions=8,
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": "512k",
-            "spark.sql.adaptive.enabled": "false",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("dump-plans")
     qs = entry_mod.queries()
     # an explicit name list may reference ANY declared query (r14: the
     # optimization targets include non-bench oracle queries like the

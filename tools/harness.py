@@ -1,0 +1,261 @@
+"""The one timing harness behind ``bench.py`` and the ``tools/`` timing
+scripts: the session profiles, the min-of-N loop, the single-run spot
+timer with its plan-shape read-out, the scale-up replicator and the
+scale report writer. The scripts are thin CLIs over this module.
+"""
+
+from __future__ import annotations
+
+import functools
+import json
+import os
+import re
+import sys
+import time
+from collections import Counter
+
+import __spark_entry__ as entry_mod
+import data_pipeline_childcare_spark as eng
+from data_pipeline_childcare_spark.operators.similarity import clear_session_caches
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# $SPARK_GRAFT_SF_DIR, or the sf0.1 testdata
+SF_DIR = eng.io.DEFAULT_SF_DIR
+
+# name -> (shuffle partitions, extra session conf) on top of the engine
+# defaults of ``get_spark``.
+PROFILES = {
+    # Tuned to the sf0.1 benchmark volume (every knob points the OTHER
+    # way on a real cluster, which is why they are set here and not in
+    # the engine defaults):
+    # - 8 shuffle partitions: every sf0.1 shuffle is well under
+    #   100 MB, so 8 keeps tasks above the ~8 MB that amortizes
+    #   task-launch overhead (at 100 TB: thousands). 16/32 were
+    #   A/B-tested on full bench runs: the difference is inside this
+    #   host's fast/slow-window jitter, so the smaller task count
+    #   stays. Plan shapes depend on it too (a reuse-boundary
+    #   repartition keyed like the input spread is elided as redundant
+    #   when the counts coincide), so plan dumps use it as well.
+    # - 512k file splits: the single-file-per-table testdata otherwise
+    #   scans on ONE core (10 MB lineitem < 128 MB default split);
+    #   smaller splits parallelize the scan like DuckDB's row-group
+    #   parallelism (at 100 TB the 128 MB default is already right).
+    # - AQE off: its per-stage stat collection + re-planning is pure
+    #   fixed latency when partitions are pre-sized to the data; the
+    #   engine default keeps it ON because runtime re-planning only
+    #   pays off at real volumes (skew, misestimates).
+    "bench": (
+        8,
+        {
+            "spark.sql.files.maxPartitionBytes": "512k",
+            "spark.sql.adaptive.enabled": "false",
+        },
+    ),
+    # The 10x clone (~1 GB): shuffle partitions are DATA-sized, not
+    # core-sized (~1 GB / 64 ≈ 16 MB each), and deliberately identical
+    # across core counts so a c32-vs-c8 comparison varies exactly one
+    # thing, the master's core count. 4 MB splits spread each ~100 MB
+    # fact file across the cores; AQE off for plan comparability with
+    # the committed dumps.
+    "sf1": (
+        64,
+        {
+            "spark.sql.files.maxPartitionBytes": "4m",
+            "spark.sql.adaptive.enabled": "false",
+        },
+    ),
+    # The 100x spot benches: engine defaults (AQE on, default splits),
+    # the production-correct settings at that volume, so their 1x legs
+    # differ from the bench profile by design.
+    "scale": (32, {}),
+}
+
+# 2 timed runs per query per pass × 3 passes over the whole list,
+# reporting the min of the 6 samples. Passes separated in time beat
+# best-of-N back-to-back runs on this box: transient multi-second slow
+# windows (host-level jitter) otherwise swallow ALL of one query's
+# consecutive attempts; a third pass halves the chance a slow window
+# covers every sample of some query.
+RUNS = 2
+PASSES = 3
+
+
+def session(app_name: str, profile: str = "bench"):
+    """The one SparkSession factory of the timing tools, sized by a
+    :data:`PROFILES` entry. The JVM gets a large heap so timed loops
+    measure operator cost, not GC pauses from the warm-up's garbage."""
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
+    partitions, conf = PROFILES[profile]
+    spark = eng.get_spark(
+        app_name=app_name, shuffle_partitions=partitions, extra_conf=conf
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def query_names(arg: str, default) -> list[str]:
+    """A ``--queries a,b,...`` value, or ``default`` when it is empty."""
+    return [q for q in arg.split(",") if q] or list(default)
+
+
+def sf_of(sf_dir: str) -> float:
+    """The scale factor a ``.../sfN`` data dir names, -1.0 otherwise."""
+    return float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
+
+
+def query_jobs(spark, sf_dir: str, names: list[str]) -> dict:
+    """``{name: callable}`` forcing each named registry query to full
+    execution with ``count()`` (the driver-facing results are small; the
+    cost is the scan/shuffle, which count() exercises identically)."""
+    qs = entry_mod.queries()
+    missing = [n for n in names if n not in qs]
+    if missing:
+        raise SystemExit(f"unknown queries: {missing}")
+
+    def job(fn):
+        return lambda: fn(spark, sf_dir).count()
+
+    return {n: job(qs[n]) for n in names}
+
+
+def min_times(spark, jobs: dict) -> dict[str, float]:
+    """Seconds per job, the min of RUNS × PASSES timed calls, rounded
+    to ms. Every timed run computes from the inputs: nothing is cached
+    up front, and the similarity model memo is cleared before each
+    timed call so an ANN job times build+probe, not a probe against an
+    index a previous run left warm."""
+    # One untimed pass over every job first, so JIT/codegen compilation
+    # (shared across queries in one JVM) is paid before any timing:
+    # otherwise the first jobs absorb compilation that later ones get
+    # for free, and the numbers depend on loop order.
+    for fn in jobs.values():
+        fn()
+    # Collect warm-up garbage now so no major GC lands mid-timing.
+    spark.sparkContext._jvm.System.gc()
+    time.sleep(1.0)
+    best = {name: float("inf") for name in jobs}
+    for _ in range(PASSES):
+        for name, fn in jobs.items():
+            for _ in range(RUNS):
+                clear_session_caches()
+                t0 = time.perf_counter()
+                fn()
+                best[name] = min(best[name], time.perf_counter() - t0)
+    return {name: round(v, 3) for name, v in best.items()}
+
+
+_NODE_RE = re.compile(r"(?m)^[\s:+\-*()0-9]*([A-Za-z][A-Za-z0-9]*)(?: (\w+))?")
+
+
+def plan_shape(df) -> Counter:
+    """Operator-name multiset of the executed plan (ids stripped).
+
+    Exchange nodes are keyed by partitioning KIND, and round-robin
+    exchanges are dropped: those come from the spread_partitions
+    input guard, which fires on the single-file 1x layout and no-ops
+    on the multi-file scaled layout — an input-layout artifact, not a
+    query-plan shape. hash/range/single-partition exchanges (the real
+    shuffles) still count."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    shape: Counter = Counter()
+    for m in _NODE_RE.finditer(plan):
+        name, arg = m.group(1), m.group(2)
+        if name == "Exchange":
+            if arg and arg.startswith("RoundRobin"):
+                continue
+            shape[f"Exchange {arg}"] += 1
+        else:
+            shape[name] += 1
+    return shape
+
+
+def plan_shapes(spark, sf_dir: str, names: list[str]) -> dict[str, Counter]:
+    """:func:`plan_shape` of each named query, built but not run."""
+    qs = entry_mod.queries()
+    return {n: plan_shape(qs[n](spark, sf_dir)) for n in names}
+
+
+def once_times(
+    spark, sf_dir: str, names: list[str], timing_only: bool = False
+) -> tuple[dict, dict]:
+    """One timed ``count()`` per query (a spot bench, not a tracked
+    min-of-N) plus each query's :func:`plan_shape`. The shapes pre-pass
+    constructs every query once before timing; build-time-checkpointed
+    chains (the ER family) materialize during construction, so on large
+    corpora it doubles an hour-scale run — ``timing_only`` skips it and
+    returns no shapes."""
+    shapes = {} if timing_only else plan_shapes(spark, sf_dir, names)
+    qs = entry_mod.queries()
+    timed = {}
+    for n in names:
+        t0 = time.perf_counter()
+        qs[n](spark, sf_dir).count()
+        timed[n] = round(time.perf_counter() - t0, 3)
+        print(
+            f"  {sf_dir.rsplit('/', 1)[-1]:8s} {n:40s} {timed[n]:8.2f}s",
+            file=sys.stderr,
+        )
+    return timed, shapes
+
+
+def replicate(spark, name: str, copies: int, tweak, src_dir: str, out_dir: str) -> None:
+    """Write ``copies`` variants of table ``name`` from ``src_dir`` —
+    ``tweak(df, i)`` for i in 0..copies-1 — as one parquet table under
+    ``out_dir``."""
+    df = eng.load_table(spark, name, src_dir)
+    out = functools.reduce(
+        lambda a, b: a.unionByName(b), (tweak(df, i) for i in range(copies))
+    )
+    out.write.mode("overwrite").parquet(os.path.join(out_dir, f"{name}.parquet"))
+
+
+def plan_drift(a: Counter, b: Counter) -> dict:
+    """``{operator: [count in a, count in b]}`` where two plan shapes differ."""
+    return {
+        k: [a.get(k, 0), b.get(k, 0)]
+        for k in set(a) | set(b)
+        if a.get(k, 0) != b.get(k, 0)
+    }
+
+
+def write_scale_report(
+    out_name: str,
+    names: list[str],
+    base: tuple,
+    scaled: tuple,
+    scaled_key: str,
+    head: dict,
+) -> None:
+    """Per-query base and scaled seconds, their ratio and the plan-shape
+    drift between the two legs (``base``/``scaled`` are
+    :func:`once_times`-shaped), merged into the dump ``REPO/out_name``
+    so ``--queries`` batches accumulate rows instead of discarding
+    previously measured ones; totals run over the merged rows."""
+    (base_t, base_s), (scaled_t, scaled_s) = base, scaled
+    report = {}
+    for n in names:
+        drift = plan_drift(base_s[n], scaled_s[n])
+        report[n] = {
+            "sec_1x": base_t[n],
+            scaled_key: scaled_t[n],
+            "ratio": round(scaled_t[n] / base_t[n], 2) if base_t[n] else None,
+            "plan_shape_same": not drift,
+            **({"plan_drift": drift} if drift else {}),
+        }
+    out_path = os.path.join(REPO, out_name)
+    merged = report
+    if os.path.isfile(out_path):
+        with open(out_path) as f:
+            merged = json.load(f).get("queries", {})
+        merged.update(report)
+    out = {
+        **head,
+        "queries": dict(sorted(merged.items())),
+        "total_1x": round(sum(v["sec_1x"] for v in merged.values()), 3),
+        "total_" + scaled_key[len("sec_"):]: round(
+            sum(v[scaled_key] for v in merged.values()), 3
+        ),
+    }
+    with open(out_path, "w") as f:
+        json.dump(out, f, indent=2)
+    print(json.dumps(out, indent=2))

@@ -36,18 +36,23 @@ import json
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as entry_mod
 import data_pipeline_childcare_spark as eng
 from bench import BENCH_QUERIES
 from pyspark.sql import functions as F
+from tools.harness import (
+    REPO,
+    once_times,
+    plan_drift,
+    query_names,
+    replicate,
+    session,
+    write_scale_report,
+)
+from tools.scale_bench import BASE_DIR, DIMS
 
-from scale_bench import BASE_DIR, DIMS, plan_shape
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SCALE_DIR = os.path.join(REPO, ".scaledata", "x100iid")
 COPIES = 100
 
@@ -63,20 +68,13 @@ def build_scaled(spark) -> None:
         shutil.rmtree(SCALE_DIR)
     os.makedirs(SCALE_DIR, exist_ok=True)
     for t in DIMS:
-        src = os.path.join(BASE_DIR, f"{t}.parquet")
         dst = os.path.join(SCALE_DIR, f"{t}.parquet")
         eng.load_table(spark, t, BASE_DIR).write.mode("overwrite").parquet(dst)
 
-    def replicate(name: str, tweak):
-        df = eng.load_table(spark, name, BASE_DIR)
-        parts = [tweak(df, i) for i in range(COPIES)]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        out.write.mode("overwrite").parquet(os.path.join(SCALE_DIR, f"{name}.parquet"))
-
     replicate(
+        spark,
         "orders",
+        COPIES,
         lambda df, i: df.select(
             (F.col("o_orderkey") + i * 10_000_000).alias("o_orderkey"),
             *[c for c in df.columns if c not in ("o_orderkey", "o_totalprice")],
@@ -84,9 +82,13 @@ def build_scaled(spark) -> None:
                 _jitter(F.col("o_totalprice"), [F.col("o_orderkey"), F.lit(i)]), 2
             ).alias("o_totalprice"),
         ),
+        BASE_DIR,
+        SCALE_DIR,
     )
     replicate(
+        spark,
         "lineitem",
+        COPIES,
         lambda df, i: df.select(
             (F.col("l_orderkey") + i * 10_000_000).alias("l_orderkey"),
             *[
@@ -108,9 +110,13 @@ def build_scaled(spark) -> None:
                 )
             ).cast("double").alias("l_quantity"),
         ),
+        BASE_DIR,
+        SCALE_DIR,
     )
     replicate(
+        spark,
         "events",
+        COPIES,
         lambda df, i: df.select(
             (F.col("event_id") + i * 10_000_000).alias("event_id"),
             (F.col("user_id") + i * 1_000_000).alias("user_id"),
@@ -124,9 +130,13 @@ def build_scaled(spark) -> None:
                 _jitter(F.col("value"), [F.col("event_id"), F.lit(i), F.lit(2)]), 4
             ).alias("value"),
         ),
+        BASE_DIR,
+        SCALE_DIR,
     )
     replicate(
+        spark,
         "documents",
+        COPIES,
         lambda df, i: (
             df
             if i == 0
@@ -142,15 +152,16 @@ def build_scaled(spark) -> None:
                 ).alias("text"),
             )
         ),
+        BASE_DIR,
+        SCALE_DIR,
     )
-    emb = eng.load_table(spark, "embeddings", BASE_DIR)
-    nvec = emb.count()
-    other = emb.select(
-        F.col("vec_id").alias("_oid"), F.col("embedding").alias("_ov")
-    )
-    parts = [emb]
-    for i in range(1, COPIES):
-        parts.append(
+    nvec = eng.load_table(spark, "embeddings", BASE_DIR).count()
+
+    def mix(emb, i):
+        if i == 0:
+            return emb
+        other = emb.select(F.col("vec_id").alias("_oid"), F.col("embedding").alias("_ov"))
+        return (
             emb.withColumn("_oid", (F.col("vec_id") + i) % nvec)
             .join(other, "_oid")
             .select(
@@ -166,10 +177,8 @@ def build_scaled(spark) -> None:
                 ).alias("embedding"),
             )
         )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    out.write.mode("overwrite").parquet(os.path.join(SCALE_DIR, "embeddings.parquet"))
+
+    replicate(spark, "embeddings", COPIES, mix, BASE_DIR, SCALE_DIR)
 
 
 # --- entity-scaled ER corpus (round-11 verdict ask #2) ------------
@@ -210,22 +219,20 @@ def build_er_entities(spark, copies: int, rebuild: bool) -> str:
         eng.load_table(spark, t, BASE_DIR).write.mode("overwrite").parquet(
             os.path.join(dst_dir, f"{t}.parquet")
         )
-    cust = eng.load_table(spark, "customer", BASE_DIR)
-    parts = []
-    for i in range(copies):
-        parts.append(
-            cust.select(
-                (F.col("c_custkey") + i * 10_000_000).alias("c_custkey"),
-                *[c for c in cust.columns if c not in ("c_custkey", "c_acctbal")],
-                F.round(
-                    _jitter(F.col("c_acctbal"), [F.col("c_custkey"), F.lit(i)]), 2
-                ).alias("c_acctbal"),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    out.write.mode("overwrite").parquet(os.path.join(dst_dir, "customer.parquet"))
+    replicate(
+        spark,
+        "customer",
+        copies,
+        lambda cust, i: cust.select(
+            (F.col("c_custkey") + i * 10_000_000).alias("c_custkey"),
+            *[c for c in cust.columns if c not in ("c_custkey", "c_acctbal")],
+            F.round(
+                _jitter(F.col("c_acctbal"), [F.col("c_custkey"), F.lit(i)]), 2
+            ).alias("c_acctbal"),
+        ),
+        BASE_DIR,
+        dst_dir,
+    )
     return dst_dir
 
 
@@ -238,11 +245,11 @@ def run_er_entity_bench(
     COLD base — the keys become ``sec_1x_cold`` and
     ``ratio_{s}x_vs_cold_base`` to say so (the committed 30x leg was
     produced this way; the default keys imply a warmed base run)."""
-    base_t, base_s = time_once(spark, BASE_DIR, names, timing_only)
+    base_t, base_s = once_times(spark, BASE_DIR, names, timing_only)
     per_scale: dict[int, tuple[dict, dict]] = {}
     for s in scales:
         d = build_er_entities(spark, s, rebuild)
-        per_scale[s] = time_once(spark, d, names, timing_only)
+        per_scale[s] = once_times(spark, d, names, timing_only)
     report = {}
     for n in names:
         base_key = "sec_1x_cold" if cold_base else "sec_1x"
@@ -257,14 +264,10 @@ def run_er_entity_bench(
                 round(st[n] / base_t[n], 2) if base_t[n] else None
             )
             if n in base_s and n in ss:
-                same = base_s[n] == ss[n]
-                row[f"plan_shape_same_{s}x"] = same
-                if not same:
-                    row[f"plan_drift_{s}x"] = {
-                        k: [base_s[n].get(k, 0), ss[n].get(k, 0)]
-                        for k in set(base_s[n]) | set(ss[n])
-                        if base_s[n].get(k, 0) != ss[n].get(k, 0)
-                    }
+                drift = plan_drift(base_s[n], ss[n])
+                row[f"plan_shape_same_{s}x"] = not drift
+                if drift:
+                    row[f"plan_drift_{s}x"] = drift
         report[n] = row
     out_path = os.path.join(REPO, "SCALE_BENCH_er_entity.json")
     merged = report
@@ -300,34 +303,6 @@ def run_er_entity_bench(
     print(json.dumps(out, indent=2))
 
 
-def time_once(
-    spark, sf_dir: str, names: list[str], timing_only: bool = False
-) -> tuple[dict, dict]:
-    # r14: base-table pre-cache removed (bench.py's r13 methodology
-    # fix) — timed runs compute from parquet; new runs are not
-    # comparable with the committed pre-r14 SCALE_BENCH_* artifacts.
-    qs = entry_mod.queries()
-    # The shapes pre-pass constructs every query once before timing;
-    # build-time-checkpointed chains (the ER family) materialize during
-    # construction, so on large corpora the pre-pass doubles an already
-    # hour-scale run. --timing-only trades the plan-shape columns for an
-    # affordable high-scale leg.
-    shapes = (
-        {} if timing_only
-        else {n: plan_shape(qs[n](spark, sf_dir)) for n in names}
-    )
-    timed = {}
-    for n in names:
-        t0 = time.perf_counter()
-        qs[n](spark, sf_dir).count()
-        timed[n] = round(time.perf_counter() - t0, 3)
-        print(
-            f"  {sf_dir.rsplit('/', 1)[-1]:8s} {n:40s} {timed[n]:8.2f}s",
-            file=sys.stderr,
-        )
-    return timed, shapes
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--rebuild", action="store_true")
@@ -352,13 +327,9 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
-    spark = eng.get_spark(
-        app_name="scale_bench_x100_iid",
-        shuffle_partitions=32,
-    )
+    spark = session("scale_bench_x100_iid", "scale")
     if args.er_entities:
-        names = [q for q in args.queries.split(",") if q] or list(ER_QUERIES)
+        names = query_names(args.queries, ER_QUERIES)
         scales = [int(s) for s in args.er_scales.split(",") if s]
         run_er_entity_bench(
             spark, scales, names, args.rebuild, args.timing_only,
@@ -367,56 +338,28 @@ def main() -> None:
         spark.stop()
         return
 
-    names = [q for q in args.queries.split(",") if q] or list(BENCH_QUERIES)
+    names = query_names(args.queries, BENCH_QUERIES)
     if args.rebuild or not os.path.isdir(SCALE_DIR):
         print("building 100x iid tables ...", file=sys.stderr)
         build_scaled(spark)
-
-    base_t, base_s = time_once(spark, BASE_DIR, names)
-    scaled_t, scaled_s = time_once(spark, SCALE_DIR, names)
-
-    report = {}
-    for n in names:
-        same = base_s[n] == scaled_s[n]
-        drift = (
-            {}
-            if same
-            else {
-                k: [base_s[n].get(k, 0), scaled_s[n].get(k, 0)]
-                for k in set(base_s[n]) | set(scaled_s[n])
-                if base_s[n].get(k, 0) != scaled_s[n].get(k, 0)
-            }
-        )
-        report[n] = {
-            "sec_1x": base_t[n],
-            "sec_100x_iid": scaled_t[n],
-            "ratio": round(scaled_t[n] / base_t[n], 2) if base_t[n] else None,
-            "plan_shape_same": same,
-            **({"plan_drift": drift} if drift else {}),
-        }
-    out_path = os.path.join(REPO, "SCALE_BENCH_x100_iid.json")
-    merged = report
-    if os.path.isfile(out_path):
-        with open(out_path) as f:
-            prior = json.load(f).get("queries", {})
-        prior.update(report)
-        merged = prior
-    out = {
-        "protocol": (
-            "single warm run per scale; 100x corpus SAMPLED (hash-jittered"
-            " facts, bootstrap-resampled doc words, mixed+noised embeddings)"
-            " instead of cloned — separates answer growth from plan cost"
-        ),
-        "copies": COPIES,
-        "queries": dict(sorted(merged.items())),
-        "total_1x": round(sum(v["sec_1x"] for v in merged.values()), 3),
-        "total_100x_iid": round(
-            sum(v["sec_100x_iid"] for v in merged.values()), 3
-        ),
-    }
-    with open(out_path, "w") as f:
-        json.dump(out, f, indent=2)
-    print(json.dumps(out, indent=2))
+    # r14: base-table pre-cache removed (bench.py's r13 methodology
+    # fix) — timed runs compute from parquet; new runs are not
+    # comparable with the committed pre-r14 SCALE_BENCH_* artifacts.
+    write_scale_report(
+        "SCALE_BENCH_x100_iid.json",
+        names,
+        once_times(spark, BASE_DIR, names),
+        once_times(spark, SCALE_DIR, names),
+        "sec_100x_iid",
+        {
+            "protocol": (
+                "single warm run per scale; 100x corpus SAMPLED (hash-jittered"
+                " facts, bootstrap-resampled doc words, mixed+noised embeddings)"
+                " instead of cloned — separates answer growth from plan cost"
+            ),
+            "copies": COPIES,
+        },
+    )
     spark.stop()
 
 
