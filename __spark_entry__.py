@@ -107,6 +107,21 @@ def _t(spark: SparkSession, sf_dir: str, name: str, spread: bool = True) -> Data
     return per_session[key]
 
 
+def _emb_double(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The embeddings table with ARRAY<DOUBLE> vectors, memoized per
+    session like :func:`_t`. The ANN indexes and trained models are held
+    on the handle they are built from (``io.held``), so every registry
+    query of a session that trains the same model on this one handle
+    (the recall audit runs five ANN families) trains it once."""
+    per_session = _TABLE_MEMO.setdefault(spark, {})
+    key = (sf_dir, "embeddings", "array<double>")
+    if key not in per_session:
+        per_session[key] = _t(spark, sf_dir, "embeddings").withColumn(
+            "embedding", F.col("embedding").cast("array<double>")
+        )
+    return per_session[key]
+
+
 def _stream_raw(spark: SparkSession, sf_dir: str, name: str):
     """File-stream over one table, returning (stream_df, raw_schema).
 
@@ -2532,9 +2547,7 @@ def hybrid_retrieval_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     lex = bm25_topk(docs, q, k=10).select(
         "query_id", F.col("doc_id").alias("item"), "rank"
     )
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
+    emb = _emb_double(spark, sf_dir)
     qv = emb.filter((F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 500)).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
@@ -2590,9 +2603,7 @@ def hybrid_retrieval_ann_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     lex = bm25_topk(docs, q, k=10).select(
         "query_id", F.col("doc_id").alias("item"), "rank"
     )
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
+    emb = _emb_double(spark, sf_dir)
     qv = emb.filter((F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 500)).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
@@ -2843,9 +2854,7 @@ def pq_adc_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-rank, hash-exact."""
     from data_pipeline_childcare_spark.operators.similarity import pq_adc_topk
 
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
+    emb = _emb_double(spark, sf_dir)
     q = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
@@ -3139,9 +3148,7 @@ def ivfpq_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     Lloyd chains, the LUT-sum scoring and the re-rank — hash-exact."""
     from data_pipeline_childcare_spark.operators.similarity import ivfpq_topk
 
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
+    emb = _emb_double(spark, sf_dir)
     q = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
@@ -3166,9 +3173,7 @@ def sq8_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     cheaper index a 100 TB corpus needs."""
     from data_pipeline_childcare_spark.operators.similarity import sq8_topk
 
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
+    emb = _emb_double(spark, sf_dir)
     q = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
@@ -3364,9 +3369,7 @@ def ngram_jaccard_prefix_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def cosine_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 for query vectors vec_id < 3."""
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
+    emb = _emb_double(spark, sf_dir)
     # the query side collapses into a BroadcastExchange (3 rows) — the
     # keyed spread under it was a wasted full exchange (r13 plan diff)
     q = (
@@ -4142,9 +4145,7 @@ def lsh_cosine_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     baseline is additionally asserted in tests."""
     from data_pipeline_childcare_spark.operators.similarity import lsh_cosine_topk
 
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
+    emb = _emb_double(spark, sf_dir)
     q = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
@@ -4165,9 +4166,7 @@ def embedding_cosine_dedup_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         embedding_cosine_dedup_lsh,
     )
 
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
+    emb = _emb_double(spark, sf_dir)
     return embedding_cosine_dedup_lsh(emb, dim=64, threshold=0.4).select("vec_id", "label")
 
 
@@ -4181,9 +4180,7 @@ def embedding_cosine_dedup_ivf_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         embedding_cosine_dedup_ivf,
     )
 
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
+    emb = _emb_double(spark, sf_dir)
     return embedding_cosine_dedup_ivf(emb, threshold=0.4).select("vec_id", "label")
 
 
@@ -4870,9 +4867,7 @@ def ivf_cosine_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute force additionally asserted in tests."""
     from data_pipeline_childcare_spark.operators.similarity import ivf_cosine_topk
 
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
+    emb = _emb_double(spark, sf_dir)
     q = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
@@ -5108,9 +5103,7 @@ def semdedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     shadowing rule."""
     from data_pipeline_childcare_spark.operators.similarity import semdedup
 
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
+    emb = _emb_double(spark, sf_dir)
     return semdedup(emb, n_cells=8, iterations=2, threshold=0.42).select(
         "vec_id", "cell", "kept", F.col("dup_of").cast("long").alias("dup_of")
     )
@@ -5131,9 +5124,7 @@ def semdedup_auto_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit factor it must pass on a sanely-sized layout."""
     from data_pipeline_childcare_spark.operators.similarity import semdedup
 
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
+    emb = _emb_double(spark, sf_dir)
     return semdedup(
         emb,
         n_cells="auto",
@@ -5575,9 +5566,7 @@ def embedding_cosine_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/similarity.py)."""
     from data_pipeline_childcare_spark.operators.similarity import embedding_cosine_dedup
 
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
+    emb = _emb_double(spark, sf_dir)
     return embedding_cosine_dedup(emb, threshold=0.4).select("vec_id", "label")
 
 
@@ -6765,9 +6754,7 @@ def hard_negatives_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-5 most-cosine-similar vectors with a DIFFERENT label."""
     from data_pipeline_childcare_spark.operators.similarity import hard_negative_topk
 
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
+    emb = _emb_double(spark, sf_dir)
     anchors = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("anchor_id"),
         F.col("embedding").alias("anchor_vec"),
@@ -6788,9 +6775,7 @@ def mmr_diverse_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         mmr_select,
     )
 
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
+    emb = _emb_double(spark, sf_dir)
     q = emb.filter(F.col("vec_id") < 2).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )

@@ -159,6 +159,23 @@ def resilient_checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
     return df.checkpoint(eager=eager)
 
 
+def held(df: DataFrame, key: tuple, build):
+    """The package's one cross-call reuse: ``build()``'s value, kept on
+    the ``df`` handle under ``key`` — built on the handle's first use,
+    returned on every later call with that handle and key, freed with
+    the handle. Indexes and trained models are held here and probed per
+    call. A held value is a SNAPSHOT of the handle's inputs at the
+    first build (the immutable-input contract); another handle over the
+    same data (``df.select("*")``) builds its own. ``key`` names every
+    build parameter and no probe-time one. Kept in the instance
+    ``__dict__`` so a lookup never reaches ``DataFrame.__getattr__``'s
+    column resolution (a JVM call)."""
+    store = vars(df).setdefault("_spark_graft_held", {})
+    if key not in store:
+        store[key] = build()
+    return store[key]
+
+
 def write_partitioned(
     df: DataFrame, path: str, partition_cols: list[str], fmt: str = "parquet", mode: str = "overwrite"
 ) -> None:

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from data_pipeline_childcare_spark.io import resilient_checkpoint
+from data_pipeline_childcare_spark.io import held, resilient_checkpoint
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -583,6 +583,11 @@ def kmeans_lite(
     tests/test_plan_contracts.py's zero-job build audit must sit in
     its ``checkpoint_builders`` whitelist.
 
+    The trained model is held on the ``corpus`` handle per (k,
+    iterations, id_col, vec_col) (:func:`io.held`): a later call with
+    the same handle returns it without a job. It is a snapshot of the
+    handle's inputs at the first build; a new handle trains afresh.
+
     Returns (cell INT, centroid ARRAY<DOUBLE>).
     """
     if k > 4096:
@@ -590,17 +595,7 @@ def kmeans_lite(
             f"kmeans_lite k={k} exceeds the 4096 driver-model cap — "
             "the centroid frame is model-sized by contract"
         )
-    _warn_build_time_training("kmeans_lite")
     spark = corpus.sparkSession
-    # a NULL vector is not trainable input: as a seed it crashes the
-    # centroid collect, and in the Lloyd update its NULL components
-    # poison the mean of whatever cell it lands in (zip_with sums
-    # propagate NULL). Quantizers train on the non-NULL corpus; NULL
-    # rows are a consumer concern (they assign NULL cosines and can
-    # never qualify a match). No-op on NULL-free corpora, so the
-    # canonical oracle trajectory is untouched.
-    corpus = corpus.filter(F.col(vec_col).isNotNull())
-    memo_key = _model_memo_key(corpus, "kmeans", k, iterations, id_col, vec_col)
 
     def cent_df(pairs):
         return _attach_local_rows(
@@ -608,47 +603,58 @@ def kmeans_lite(
             pairs,
         )
 
-    if memo_key is not None and memo_key in _MODEL_MEMO:
-        return cent_df(_MODEL_MEMO[memo_key])
-    # one lazy checkpoint of the (id, vec) training projection:
-    # every iteration (and the seed scan) would otherwise re-run the
-    # corpus scan + spread exchange — MLlib's KMeans caches its input
-    # for exactly this reason. Freed on GC, never CacheManager-
-    # registered (no cross-run reuse).
-    train = resilient_checkpoint(
-        corpus.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col))
-    )
-    seed_hash = F.expr(
-        f"cast(conv(substring(md5(cast(`{id_col}` as string)), 1, 15), 16, 10) as bigint)"
-    )
-    seed_rows = (
-        train.withColumn("_r", seed_hash)
-        .orderBy("_r")
-        .limit(k)
-        .select("_r", F.col(vec_col).alias("centroid"))
-        .collect()
-    )
-    cents = [
-        (i + 1, list(r["centroid"]))
-        for i, r in enumerate(sorted(seed_rows, key=lambda r: r["_r"]))
-    ]
-    for _ in range(iterations):
-        if not cents:
-            # empty trainable corpus (no rows, or every vector NULL) or
-            # a degenerate update (all-empty-array vectors explode to
-            # zero rows): no model to refine — return the empty model
-            break
-        assigned = _assign_cells(train, cent_df(cents), id_col, vec_col)
-        exploded = assigned.select(
-            "cell", F.posexplode(F.col(vec_col).cast("array<double>")).alias("pos", "v")
+    def fit():
+        _warn_build_time_training("kmeans_lite")
+        # a NULL vector is not trainable input: as a seed it crashes
+        # the centroid collect, and in the Lloyd update its NULL
+        # components poison the mean of whatever cell it lands in
+        # (zip_with sums propagate NULL). Quantizers train on the
+        # non-NULL corpus; NULL rows are a consumer concern (they
+        # assign NULL cosines and can never qualify a match). No-op on
+        # NULL-free corpora, so the canonical oracle trajectory is
+        # untouched.
+        # One lazy checkpoint of the (id, vec) training projection:
+        # every iteration (and the seed scan) would otherwise re-run the
+        # corpus scan + spread exchange — MLlib's KMeans caches its input
+        # for exactly this reason. Freed on GC, never CacheManager-
+        # registered (no cross-run reuse).
+        train = resilient_checkpoint(
+            corpus.filter(F.col(vec_col).isNotNull()).select(
+                F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
+            )
         )
-        per_pos = exploded.groupBy("cell", "pos").agg(
-            F.round(F.round(F.sum("v"), 6) / F.count("v"), 6).alias("m")
+        seed_hash = F.expr(
+            f"cast(conv(substring(md5(cast(`{id_col}` as string)), 1, 15), 16, 10) as bigint)"
         )
-        cents = _lloyd_update(per_pos, ["cell"], cents)
-    if memo_key is not None:
-        _model_memo_put(memo_key, cents)
-    return cent_df(cents)
+        seed_rows = (
+            train.withColumn("_r", seed_hash)
+            .orderBy("_r")
+            .limit(k)
+            .select("_r", F.col(vec_col).alias("centroid"))
+            .collect()
+        )
+        cents = [
+            (i + 1, list(r["centroid"]))
+            for i, r in enumerate(sorted(seed_rows, key=lambda r: r["_r"]))
+        ]
+        for _ in range(iterations):
+            if not cents:
+                # empty trainable corpus (no rows, or every vector NULL)
+                # or a degenerate update (all-empty-array vectors
+                # explode to zero rows): no model to refine — return
+                # the empty model
+                break
+            assigned = _assign_cells(train, cent_df(cents), id_col, vec_col)
+            exploded = assigned.select(
+                "cell", F.posexplode(F.col(vec_col).cast("array<double>")).alias("pos", "v")
+            )
+            per_pos = exploded.groupBy("cell", "pos").agg(
+                F.round(F.round(F.sum("v"), 6) / F.count("v"), 6).alias("m")
+            )
+            cents = _lloyd_update(per_pos, ["cell"], cents)
+        return cent_df(cents)
+
+    return held(corpus, ("kmeans_lite", k, iterations, id_col, vec_col), fit)
 
 
 # literal-assignment gate: total doubles shipped into the plan as
@@ -932,16 +938,29 @@ def ivf_cosine_topk(
     probe their ``n_probe`` nearest cells, exact re-score inside the
     probed cells only.
 
-    The scale shape: the index (cell assignment) is built once and the
-    per-query candidate set is |corpus| * n_probe / n_cells — the
-    recall/cost dial every production ANN system exposes. At 100 TB
-    the assignment column is written alongside the vectors (partition
-    by cell) so probing prunes file scans. ``n_cells="auto"`` applies
-    the √(distinct) sizing rule (:func:`auto_n_cells`).
+    The scale shape: the index (centroids + the checkpointed cell
+    assignment of every corpus vector) is built once per ``corpus``
+    handle and (n_cells as given, iterations, id_col, vec_col), held on
+    the handle (:func:`io.held`), and every call computes only its
+    query probes; the per-query candidate set is |corpus| * n_probe /
+    n_cells — the recall/cost dial every production ANN system exposes.
+    A held index is a snapshot of the handle's inputs at its first
+    build — pass a new handle for changed data. At 100 TB the
+    assignment column is written alongside the vectors (partition by
+    cell) so probing prunes file scans. ``n_cells="auto"`` applies the
+    √(distinct) sizing rule (:func:`auto_n_cells`).
     """
-    n_cells = _resolve_n_cells(corpus, n_cells, vec_col, "ivf_cosine_topk")
-    centroids = kmeans_lite(corpus, n_cells, iterations, id_col, vec_col)
-    indexed = _assign_cells(corpus, centroids, id_col, vec_col)
+
+    def build():
+        cells = _resolve_n_cells(corpus, n_cells, vec_col, "ivf_cosine_topk")
+        centroids = kmeans_lite(corpus, cells, iterations, id_col, vec_col)
+        return centroids, resilient_checkpoint(
+            _assign_cells(corpus.select(id_col, vec_col), centroids, id_col, vec_col)
+        )
+
+    centroids, indexed = held(
+        corpus, ("ivf_cosine_topk", n_cells, iterations, id_col, vec_col), build
+    )
     probes = _assign_cells(queries, centroids, query_id_col, query_vec_col, n_probe)
     cand = indexed.join(F.broadcast(probes), "cell").filter(
         F.col(query_id_col) != F.col(id_col)
@@ -1312,27 +1331,6 @@ def semdedup(
     return out.unionByName(nonreps)
 
 
-# Driver-resident MODEL memo: trained centroid/codebook lists keyed by
-# (application id, analyzed-plan semantic hash, schema, params). A
-# built quantizer IS an index artifact — rebuilding it on every query
-# invocation that composes the same family (the recall audit invokes
-# all six) re-pays the whole Lloyd loop for identical results. Session
-# -scoped by applicationId; parquet inputs are immutable snapshots
-# within a session by engine contract, so plan identity implies data
-# identity. Values are exactly the once-trained lists — consumers see
-# bit-identical centroids, so oracle parity is untouched.
-_MODEL_MEMO: dict = {}
-
-
-def _model_memo_key(df: DataFrame, *params):
-    try:
-        h = df._jdf.queryExecution().analyzed().semanticHash()
-        app = df.sparkSession.sparkContext.applicationId
-    except Exception:  # non-JVM frame (testing stub) — skip memoing
-        return None
-    return (app, h, tuple(df.columns), params)
-
-
 _BUILD_TIME_TRAINING_WARNED: set = set()
 
 
@@ -1356,34 +1354,6 @@ def _warn_build_time_training(fn_name: str) -> None:
         "must be whitelisted in tests/test_plan_contracts.py.",
         fn_name,
     )
-
-
-def _model_memo_put(key, value) -> None:
-    """Insert a trained model, evicting entries from DEAD sessions.
-
-    Keys lead with applicationId; a long-lived process that restarts
-    SparkSession (multi-session test runs) would otherwise accumulate
-    unreachable entries forever. Evicting on the app boundary keeps the
-    memo bounded by one session's distinct (plan, params) space, which
-    is what the session-scoped immutable-input contract covers."""
-    app = key[0]
-    stale = [k for k in _MODEL_MEMO if k[0] != app]
-    for k in stale:
-        del _MODEL_MEMO[k]
-    _MODEL_MEMO[key] = value
-
-
-def clear_session_caches() -> None:
-    """Drop the module's one cross-invocation cache: the trained model
-    memo (kmeans centroids, PQ codebooks).
-
-    Benchmark harnesses call this between timed runs so every timed
-    invocation trains from the raw inputs — the memo is a SESSION
-    convenience (a warm service reuses its models), but a bench that
-    times run N>1 against a memoized model is measuring probe cost
-    while reporting build+probe (r13 methodology). Library users never
-    need this."""
-    _MODEL_MEMO.clear()
 
 
 def _l2sq(a: Column, b: Column) -> Column:
@@ -1551,7 +1521,6 @@ def pq_codebooks(
     iterations: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    memo_key=None,
 ) -> DataFrame:
     """Product-quantization codebooks (Jégou et al. 2011, "Product
     quantization for nearest neighbor search"): split the vector into
@@ -1577,7 +1546,9 @@ def pq_codebooks(
     scheduling latency disappear (pq_adc gate row measured 6.1→2 s
     at sf0.01). At 100 TB one samples the training corpus first; the
     codebook frame itself is n_sub·n_codes rows (broadcast everywhere
-    downstream)."""
+    downstream). The codebook is held on the ``corpus`` handle per
+    build parameter set (:func:`io.held`; the :func:`kmeans_lite`
+    snapshot contract)."""
     if dim % n_sub:
         raise ValueError(f"dim {dim} not divisible by n_sub {n_sub}")
     if n_sub * n_codes > 4096:
@@ -1587,18 +1558,6 @@ def pq_codebooks(
         )
     sub = dim // n_sub
     spark = corpus.sparkSession
-    # NULL vectors are not trainable input (see kmeans_lite): as a seed
-    # one crashes the seed collect
-    corpus = corpus.filter(F.col(vec_col).isNotNull())
-    # callers whose training corpus has no invocation-stable plan (the
-    # ivfpq residual frame reads a per-call checkpoint, whose semantic
-    # hash differs on every invocation) pass an explicit memo_key
-    # derived from the RAW corpus + all params
-    _warn_build_time_training("pq_codebooks")
-    if memo_key is None:
-        memo_key = _model_memo_key(
-            corpus, "pq", dim, n_sub, n_codes, iterations, id_col, vec_col
-        )
 
     def cent_df(triples):
         return _attach_local_rows(
@@ -1608,52 +1567,56 @@ def pq_codebooks(
             triples,
         )
 
-    if memo_key is not None and memo_key in _MODEL_MEMO:
-        return cent_df(_MODEL_MEMO[memo_key])
-    seed_hash = F.expr(
-        f"cast(conv(substring(md5(cast(`{id_col}` as string)), 1, 15), 16, 10) as bigint)"
-    )
-    seed_rows = (
-        corpus.withColumn("_r", seed_hash)
-        .orderBy("_r")
-        .limit(n_codes)
-        .select("_r", F.col(vec_col).cast("array<double>").alias("_seed"))
-        .collect()
-    )
-    cents = [
-        (b, i + 1, list(r["_seed"])[(b - 1) * sub : b * sub])
-        for i, r in enumerate(sorted(seed_rows, key=lambda r: r["_r"]))
-        for b in range(1, n_sub + 1)
-    ]
-    bcorpus = corpus.select(
-        F.col(id_col),
-        F.posexplode(
-            F.array(
-                *[
-                    F.slice(F.col(vec_col).cast("array<double>"), (b - 1) * sub + 1, sub)
-                    for b in range(1, n_sub + 1)
-                ]
-            )
-        ).alias("_b0", "_sv"),
-    ).select(F.col(id_col), (F.col("_b0") + 1).alias("block"), "_sv")
-    # lazy checkpoint: each Lloyd iteration re-read the corpus
-    # scan + spread + sub-block explode otherwise (kmeans_lite's
-    # training-cache discipline; freed on GC, no cross-run reuse)
-    bcorpus = resilient_checkpoint(bcorpus)
-    for _ in range(iterations):
-        if not cents:
-            # empty trainable corpus: no model to refine (kmeans_lite)
-            break
-        assigned = _pq_assign(bcorpus, cent_df(cents), id_col, n_sub)
-        per_pos = assigned.select(
-            "block", "code", F.posexplode("_sv").alias("pos", "v")
-        ).groupBy("block", "code", "pos").agg(
-            F.round(F.round(F.sum("v"), 6) / F.count("v"), 6).alias("m")
+    def fit():
+        _warn_build_time_training("pq_codebooks")
+        # NULL vectors are not trainable input (see kmeans_lite): as a
+        # seed one crashes the seed collect
+        trainable = corpus.filter(F.col(vec_col).isNotNull())
+        seed_hash = F.expr(
+            f"cast(conv(substring(md5(cast(`{id_col}` as string)), 1, 15), 16, 10) as bigint)"
         )
-        cents = _lloyd_update(per_pos, ["block", "code"], cents)
-    if memo_key is not None:
-        _model_memo_put(memo_key, cents)
-    return cent_df(cents)
+        seed_rows = (
+            trainable.withColumn("_r", seed_hash)
+            .orderBy("_r")
+            .limit(n_codes)
+            .select("_r", F.col(vec_col).cast("array<double>").alias("_seed"))
+            .collect()
+        )
+        cents = [
+            (b, i + 1, list(r["_seed"])[(b - 1) * sub : b * sub])
+            for i, r in enumerate(sorted(seed_rows, key=lambda r: r["_r"]))
+            for b in range(1, n_sub + 1)
+        ]
+        bcorpus = trainable.select(
+            F.col(id_col),
+            F.posexplode(
+                F.array(
+                    *[
+                        F.slice(F.col(vec_col).cast("array<double>"), (b - 1) * sub + 1, sub)
+                        for b in range(1, n_sub + 1)
+                    ]
+                )
+            ).alias("_b0", "_sv"),
+        ).select(F.col(id_col), (F.col("_b0") + 1).alias("block"), "_sv")
+        # lazy checkpoint: each Lloyd iteration re-read the corpus
+        # scan + spread + sub-block explode otherwise (kmeans_lite's
+        # training-cache discipline; freed on GC, no cross-run reuse)
+        bcorpus = resilient_checkpoint(bcorpus)
+        for _ in range(iterations):
+            if not cents:
+                # empty trainable corpus: no model to refine (kmeans_lite)
+                break
+            assigned = _pq_assign(bcorpus, cent_df(cents), id_col, n_sub)
+            per_pos = assigned.select(
+                "block", "code", F.posexplode("_sv").alias("pos", "v")
+            ).groupBy("block", "code", "pos").agg(
+                F.round(F.round(F.sum("v"), 6) / F.count("v"), 6).alias("m")
+            )
+            cents = _lloyd_update(per_pos, ["block", "code"], cents)
+        return cent_df(cents)
+
+    key = ("pq_codebooks", dim, n_sub, n_codes, iterations, id_col, vec_col)
+    return held(corpus, key, fit)
 
 
 def pq_encode(
@@ -1884,12 +1847,13 @@ def ivfpq_topk(
                 lambda x, y: x - y,
             ).alias("_res"),
         )
-    books = pq_codebooks(
-        resid, dim, n_sub, n_codes, pq_iterations, id_col, "_res",
-        memo_key=_model_memo_key(
-            corpus, "ivfpq-books", n_cells, coarse_iterations, dim,
-            n_sub, n_codes, pq_iterations, id_col, vec_col,
-        ),
+    # the residual frame is per call, so its codebook is held on the
+    # raw corpus handle, keyed by every parameter it depends on
+    books = held(
+        corpus,
+        ("ivfpq_books", n_cells, coarse_iterations, dim, n_sub, n_codes,
+         pq_iterations, id_col, vec_col),
+        lambda: pq_codebooks(resid, dim, n_sub, n_codes, pq_iterations, id_col, "_res"),
     )
     sub = dim // n_sub
     by_block = _literal_codebook(books, n_sub)

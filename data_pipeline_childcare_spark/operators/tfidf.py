@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from data_pipeline_childcare_spark.functions.text import tokenize
-from data_pipeline_childcare_spark.io import resilient_checkpoint, spread_partitions
+from data_pipeline_childcare_spark.io import held, resilient_checkpoint, spread_partitions
 
 
 def tfidf_top_terms(
@@ -523,28 +523,26 @@ def bm25_topk(
     rank window so the top-k cut and tie-breaks (score desc, doc_id)
     are identical in any engine.
 
-    Shapes: one tokenize pass over the corpus → (doc, term) tf
-    aggregate (map-side combined) + per-doc lengths re-aggregated
-    from the tf rows; term df from the SAME rows; the query side is
-    query-plan-sized. The one big join is postings ⨝ query-terms on
-    the term key — stopword terms are the skew, exactly where
-    classic search engines stop-list: ``max_df`` drops terms in more
-    than that many documents from the INDEX side (with Lucene-idf
-    those terms contribute least per posting and cost most to join).
-    avgdl is an exact integer-sum / count division, so the float is
-    bit-identical across engines; one-row broadcast.
+    Index: the postings ``(_t, id, _tf, _dl, _df, _n, _avgdl)``
+    (:func:`_bm25_postings`) are built once per ``docs`` handle and
+    ``(id_col, text_col)`` and held on it (:func:`io.held`); every
+    call probes them. A held index is a snapshot of the handle's
+    inputs at its first build — pass a new handle for changed data.
+    ``k``, ``k1``, ``b``, ``ndigits`` and ``max_df`` are probe-time.
+
+    Probe: the query-plan-sized term set is broadcast against the
+    postings, then one (query, doc) aggregate and the rank window.
+    Stopword terms are the skew, exactly where classic search engines
+    stop-list: ``max_df`` drops terms in more than that many documents
+    (with Lucene-idf those terms contribute least per posting and cost
+    most to join).
     """
-    toks = spread_partitions(docs, id_col).select(
-        F.col(id_col), F.explode(tokenize(F.col(text_col))).alias("_t")
+    postings = held(
+        docs, ("bm25_postings", id_col, text_col),
+        lambda: _bm25_postings(docs, id_col, text_col),
     )
-    tf = toks.groupBy(id_col, "_t").agg(F.count("*").alias("_tf"))
-    dl = tf.groupBy(id_col).agg(F.sum("_tf").alias("_dl"))
-    stats = dl.agg(
-        F.count("*").alias("_n"), F.sum("_dl").alias("_sumdl")
-    ).select("_n", (F.col("_sumdl") / F.col("_n")).alias("_avgdl"))
-    dfreq = tf.groupBy("_t").agg(F.count("*").alias("_df"))
     if max_df is not None:
-        dfreq = dfreq.filter(F.col("_df") <= max_df)
+        postings = postings.filter(F.col("_df") <= max_df)
     qterms = (
         spread_partitions(queries, qid_col)
         .select(F.col(qid_col), F.explode(tokenize(F.col(qtext_col))).alias("_t"))
@@ -559,10 +557,7 @@ def bm25_topk(
         + F.lit(k1) * (F.lit(1.0 - b) + (F.lit(b) * F.col("_dl")) / F.col("_avgdl"))
     )
     scored = (
-        qterms.join(dfreq, "_t")
-        .join(tf, "_t")
-        .join(dl, id_col)
-        .join(F.broadcast(stats))
+        postings.join(F.broadcast(qterms), "_t")
         .groupBy(qid_col, id_col)
         .agg(F.round(F.sum(term_score), ndigits).alias("score"))
     )
@@ -571,6 +566,33 @@ def bm25_topk(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(qid_col, id_col, "rank", "score")
+    )
+
+
+def _bm25_postings(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """The BM25 inverted index, one row per (term, doc): ``(_t, id,
+    _tf, _dl, _df, _n, _avgdl)``, materialized once through
+    :func:`io.resilient_checkpoint`. One tokenize pass → (doc, term) tf
+    aggregate (map-side combined); doc lengths re-aggregated from the
+    tf rows; term df from the SAME rows; N and avgdl as one row (avgdl
+    an exact integer-sum / count division, so the float is
+    bit-identical across engines). A NULL id counts toward df, N and
+    avgdl but is never scored (the id equi-join drops it); rows sharing
+    an id are one document; a doc without tokens is not a document."""
+    toks = spread_partitions(docs, id_col).select(
+        F.col(id_col), F.explode(tokenize(F.col(text_col))).alias("_t")
+    )
+    tf = toks.groupBy(id_col, "_t").agg(F.count("*").alias("_tf"))
+    dl = tf.groupBy(id_col).agg(F.sum("_tf").alias("_dl"))
+    stats = dl.agg(
+        F.count("*").alias("_n"), F.sum("_dl").alias("_sumdl")
+    ).select("_n", (F.col("_sumdl") / F.col("_n")).alias("_avgdl"))
+    dfreq = tf.groupBy("_t").agg(F.count("*").alias("_df"))
+    return resilient_checkpoint(
+        tf.join(dl, id_col)
+        .join(dfreq, "_t")
+        .join(F.broadcast(stats))
+        .select("_t", id_col, "_tf", "_dl", "_df", "_n", "_avgdl")
     )
 
 

@@ -115,17 +115,19 @@ def _part_files(ckpt_dir):
 
 def test_dedup_ann_tokenizer_reliable_mode_same_output(spark, reliable):
     """One tiny input each for the dedup (signature boundary), ANN
-    (Lloyd training cache, ivfpq's per-call index) and tokenizer
-    (per-round vocab cut) families: in reliable mode each writes into
-    the checkpoint dir and returns the same rows as the default local
+    (Lloyd training cache, the held IVF cell assignment, ivfpq's
+    per-call index), BM25 (the held postings) and tokenizer (per-round
+    vocab cut) families: in reliable mode each writes into the
+    checkpoint dir and returns the same rows as the default local
     mode."""
     from data_pipeline_childcare_spark.operators.bpe import learn_bpe_merges
     from data_pipeline_childcare_spark.operators.dedup import minhash_dedup_portable
     from data_pipeline_childcare_spark.operators.similarity import (
-        clear_session_caches,
+        ivf_cosine_topk,
         ivfpq_topk,
         kmeans_lite,
     )
+    from data_pipeline_childcare_spark.operators.tfidf import bm25_topk
 
     base = "the quick brown fox jumps over the lazy dog near the river bank"
     docs = spark.createDataFrame(
@@ -139,17 +141,25 @@ def test_dedup_ann_tokenizer_reliable_mode_same_output(spark, reliable):
     queries = vecs.filter(F.col("vec_id") < 2).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
+    qtext = spark.createDataFrame(
+        [(1, "quick river"), (2, "different text today")], "query_id long, qtext string"
+    )
+    # each run takes fresh input handles: an index or model held on a
+    # previous run's handle would skip the materializations under test
     runs = {
         "minhash_dedup_portable": lambda: minhash_dedup_portable(docs, threshold=0.5),
-        "kmeans_lite": lambda: kmeans_lite(vecs, k=3, iterations=2),
-        "ivfpq_topk": lambda: ivfpq_topk(
-            vecs, queries, k=2, n_cells=3, n_probe=2, dim=3, n_sub=1, n_codes=2
+        "kmeans_lite": lambda: kmeans_lite(vecs.select("*"), k=3, iterations=2),
+        "ivf_cosine_topk": lambda: ivf_cosine_topk(
+            vecs.select("*"), queries, k=2, n_cells=3, n_probe=2
         ),
+        "ivfpq_topk": lambda: ivfpq_topk(
+            vecs.select("*"), queries, k=2, n_cells=3, n_probe=2, dim=3, n_sub=1, n_codes=2
+        ),
+        "bm25_topk": lambda: bm25_topk(docs.select("*"), qtext, k=2),
         "learn_bpe_merges": lambda: learn_bpe_merges(docs, n_merges=3),
     }
 
     def rows(run):
-        clear_session_caches()  # the kmeans model memo would skip training
         return sorted(map(str, run().collect()))
 
     got_reliable = {}
@@ -161,6 +171,8 @@ def test_dedup_ann_tokenizer_reliable_mode_same_output(spark, reliable):
     for name, run in runs.items():
         assert rows(run) == got_reliable[name], name
     assert len(got_reliable["ivfpq_topk"]) == 4  # k=2 for each of 2 queries
+    assert len(got_reliable["ivf_cosine_topk"]) == 4
+    assert len(got_reliable["bm25_topk"]) == 4
     kept = got_reliable["minhash_dedup_portable"]
     assert len(kept) == 2 and not any("doc_id=2" in r for r in kept), kept
 

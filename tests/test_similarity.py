@@ -644,7 +644,6 @@ def test_pq_codebooks_skip_null_vectors(spark):
     without = emb.filter(F.col("vec_id") != first)
 
     def books(corpus):
-        sim.clear_session_caches()
         return sorted(
             (r.block, r.code, list(r.centroid))
             for r in sim.pq_codebooks(corpus, dim=64, n_sub=4, n_codes=4).collect()
@@ -835,10 +834,10 @@ def test_ann_gate_both_sides_same_rows(spark, monkeypatch, name):
     monkeypatch.setattr(sim, "_literal_side", spy)
 
     def side():
-        # the model memo would skip training, and with it the gates
-        sim.clear_session_caches()
+        # a fresh corpus handle: a model held on the previous side's
+        # handle would skip training, and with it the gates
         fired.clear()
-        out = run(corpus, queries)
+        out = run(corpus.select("*"), queries)
         return out, list(fired)
 
     literal, lit_fired = side()

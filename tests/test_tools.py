@@ -53,7 +53,7 @@ def test_min_times_warms_up_clears_and_keeps_the_min(monkeypatch):
 
     monkeypatch.setattr(harness.time, "perf_counter", lambda: clock[0])
     monkeypatch.setattr(harness.time, "sleep", lambda s: events.append("sleep"))
-    monkeypatch.setattr(harness, "clear_session_caches", lambda: events.append("clear"))
+    monkeypatch.setattr(harness, "fresh_tables", lambda: events.append("fresh"))
     spark = SimpleNamespace(
         sparkContext=SimpleNamespace(
             _jvm=SimpleNamespace(System=SimpleNamespace(gc=lambda: events.append("gc")))
@@ -62,8 +62,22 @@ def test_min_times_warms_up_clears_and_keeps_the_min(monkeypatch):
     assert (harness.RUNS, harness.PASSES) == (2, 3)
     got = harness.min_times(spark, {"a": job("a"), "b": job("b")})
     assert got == {"a": 3.0, "b": 0.5}
-    per_pass = ["clear", "a"] * harness.RUNS + ["clear", "b"] * harness.RUNS
+    per_pass = ["fresh", "a"] * harness.RUNS + ["fresh", "b"] * harness.RUNS
     assert events == ["a", "b", "gc", "sleep"] + per_pass * harness.PASSES
+
+
+def test_fresh_tables_renews_every_handle_over_the_same_plan(monkeypatch):
+    class Handle:
+        def __init__(self, jdf, session):
+            self._jdf, self.sparkSession = jdf, session
+
+    raw = Handle("jdf-docs", "session")
+    memo = {"session": {("sf", "documents"): raw, ("sf", "documents", False): raw}}
+    monkeypatch.setattr(harness.entry_mod, "_TABLE_MEMO", memo)
+    harness.fresh_tables()
+    new = memo["session"]
+    assert all(h is not raw for h in new.values())
+    assert {(h._jdf, h.sparkSession) for h in new.values()} == {("jdf-docs", "session")}
 
 
 def test_plan_shape_drops_round_robin_and_counts_hash_exchanges():

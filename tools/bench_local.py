@@ -14,8 +14,8 @@ Writes one JSON file shaped like bench.py's line ({"queries": {...},
 "total": N, "sf": 0.1}) — commit the r{N} dump and compare in README.
 
 Comparability: from r13 on every timed run computes from the parquet
-inputs with the similarity model memo cleared, so ANN rows report
-build+probe; r12-and-earlier dumps are NOT comparable for the ANN
+inputs on fresh table handles (no index or model held from an earlier
+run), so ANN and BM25 rows report build+probe; r12-and-earlier dumps are NOT comparable for the ANN
 quartet / ivfpq rows. The committed BENCH_LOCAL_r* dumps took the min
 of 4 samples; the harness takes the min of 6.
 """
