@@ -806,7 +806,10 @@ def ann_recall_audit_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     (each broadcast probe side re-runs its upstream — no
     ReusedExchange). |queries|·k rows, materialized once per call
     through ``io.resilient_checkpoint`` (reliable mode covers it;
-    nothing is reused across calls)."""
+    nothing is reused across calls). The ANN indexes are not per call:
+    the IVF and IVF-PQ legs probe one IVF index (8 cells, 2 iterations)
+    held on the session's embeddings handle, built once by whichever
+    leg runs first, and the trained models are held the same way."""
     from data_pipeline_childcare_spark.io import resilient_checkpoint
 
     exact = resilient_checkpoint(
@@ -1782,9 +1785,15 @@ def brand_yoy_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Year-over-year reporting shape: per brand, yearly revenue with
     the previous year's value and the delta via a lag window OVER THE
     AGGREGATE (|brands|×|years| rows) — the window never touches the
-    fact table, so its cost is independent of lineitem volume."""
+    fact table, so its cost is independent of lineitem volume.
+
+    Revenue is summed exactly, as DECIMAL at the inputs' 2-dp scale,
+    then rounded HALF_UP and cast back to double: a double sum depends
+    on the summation order (input partitioning), and a group whose
+    exact revenue is a half-cent tie would round either way."""
     li = _t(spark, sf_dir, "lineitem")
     part = _t(spark, sf_dir, "part")
+    cents = "decimal(15,2)"
     yearly = (
         li.join(F.broadcast(part), li["l_partkey"] == part["p_partkey"])
         .groupBy(
@@ -1792,8 +1801,14 @@ def brand_yoy_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
+                F.sum(
+                    F.col("l_extendedprice").cast(cents)
+                    * (1 - F.col("l_discount").cast(cents))
+                ),
+                2,
+            )
+            .cast("double")
+            .alias("revenue")
         )
     )
     w = Window.partitionBy("p_brand").orderBy("ship_year")

@@ -38,6 +38,71 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+def _md5_seed_order(id_col: str) -> Column:
+    """The family's canonical seed order (:func:`kmeans_lite`,
+    :func:`pq_codebooks`, :func:`kcenter_select`): the first 15 hex
+    digits of md5(id) as a BIGINT — engine-portable, so a SQL oracle
+    reproduces the seed set and order (xxhash64 would not)."""
+    return F.expr(
+        f"cast(conv(substring(md5(cast(`{id_col}` as string)), 1, 15), 16, 10) as bigint)"
+    )
+
+
+def _rank_topk(
+    scored: DataFrame, score_col: str, k: int, query_id_col: str, id_col: str
+) -> DataFrame:
+    """The ANN top-k operators' one per-query ranking: ``rank`` =
+    row_number over (``score_col`` desc, id asc) per query, keeping
+    rank ≤ ``k``."""
+    w = Window.partitionBy(query_id_col).orderBy(F.desc(score_col), F.col(id_col))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _shortlist_topk(
+    scored: DataFrame,
+    score_col: str,
+    k: int,
+    rerank_shortlist: int | None,
+    corpus: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+    query_vec_col: str,
+) -> DataFrame:
+    """Top-``k`` by an approximate ``score_col`` (PQ-ADC, IVF-PQ, SQ8).
+    With ``rerank_shortlist``, the IVFADC-style exact re-rank: the
+    approximate pass only SHORTLISTS its top ``rerank_shortlist``; the
+    true vectors are fetched for that shortlist alone and re-scored
+    with exact cosine, ranked by ``cosine_sim`` (``score_col`` kept).
+    At 100 TB this is the standard two-stage read: the cheap pass
+    touches codes, the full-vector read touches |Q|·shortlist rows."""
+    if rerank_shortlist is None:
+        return _rank_topk(scored, score_col, k, query_id_col, id_col)
+    shortlist = _rank_topk(
+        scored, score_col, rerank_shortlist, query_id_col, id_col
+    ).select(query_id_col, id_col, score_col)
+    qv = queries.select(
+        F.col(query_id_col), F.col(query_vec_col).cast("array<double>").alias("_qv")
+    )
+    cand = (
+        shortlist.join(
+            corpus.select(
+                F.col(id_col), F.col(vec_col).cast("array<double>").alias("_cv")
+            ),
+            id_col,
+        )
+        .join(F.broadcast(qv), query_id_col)
+        .select(
+            query_id_col,
+            id_col,
+            score_col,
+            F.round(cosine(F.col("_cv"), F.col("_qv")), 6).alias("cosine_sim"),
+        )
+    )
+    return _rank_topk(cand, "cosine_sim", k, query_id_col, id_col)
+
+
 def cosine_topk_bruteforce(
     corpus: DataFrame,
     queries: DataFrame,
@@ -72,11 +137,7 @@ def cosine_topk_bruteforce(
         *[F.col(c) for c in payload_cols],
         F.round(cosine(F.col(vec_col), F.col(query_vec_col)), 6).alias("cosine_sim"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine_sim"), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank_topk(scored, "cosine_sim", k, query_id_col, id_col)
 
 
 def _verbatim_reps(
@@ -374,8 +435,7 @@ def lsh_cosine_topk(
             F.round(cosine(F.col(vec_col), F.col(query_vec_col)), 6).alias("cosine_sim"),
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine_sim"), F.col(id_col))
-    return cand.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rank_topk(cand, "cosine_sim", k, query_id_col, id_col)
 
 
 def embedding_cosine_dedup_ivf(
@@ -623,11 +683,8 @@ def kmeans_lite(
                 F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
             )
         )
-        seed_hash = F.expr(
-            f"cast(conv(substring(md5(cast(`{id_col}` as string)), 1, 15), 16, 10) as bigint)"
-        )
         seed_rows = (
-            train.withColumn("_r", seed_hash)
+            train.withColumn("_r", _md5_seed_order(id_col))
             .orderBy("_r")
             .limit(k)
             .select("_r", F.col(vec_col).alias("centroid"))
@@ -922,6 +979,32 @@ def _assign_cells(
     )
 
 
+def _ivf_index(
+    corpus: DataFrame,
+    n_cells: int | str,
+    iterations: int,
+    id_col: str,
+    vec_col: str,
+) -> tuple[DataFrame, DataFrame]:
+    """The IVF index of ``corpus``: ``(centroids, assignment)``, the
+    :func:`kmeans_lite` coarse quantizer and the checkpointed nearest
+    cell of every (id, vec) row — the inverted lists a production IVF
+    build stores. Held on the ``corpus`` handle (:func:`io.held`) per
+    (n_cells as given, iterations, id_col, vec_col), so
+    :func:`ivf_cosine_topk` and :func:`ivfpq_topk` at the same
+    parameters on one handle share one build, and every later call
+    only probes. A snapshot of the handle's inputs at its first build."""
+
+    def build():
+        cells = _resolve_n_cells(corpus, n_cells, vec_col, "ivf_index")
+        centroids = kmeans_lite(corpus, cells, iterations, id_col, vec_col)
+        return centroids, resilient_checkpoint(
+            _assign_cells(corpus.select(id_col, vec_col), centroids, id_col, vec_col)
+        )
+
+    return held(corpus, ("ivf_index", n_cells, iterations, id_col, vec_col), build)
+
+
 def ivf_cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -939,28 +1022,17 @@ def ivf_cosine_topk(
     probed cells only.
 
     The scale shape: the index (centroids + the checkpointed cell
-    assignment of every corpus vector) is built once per ``corpus``
-    handle and (n_cells as given, iterations, id_col, vec_col), held on
-    the handle (:func:`io.held`), and every call computes only its
-    query probes; the per-query candidate set is |corpus| * n_probe /
-    n_cells — the recall/cost dial every production ANN system exposes.
-    A held index is a snapshot of the handle's inputs at its first
-    build — pass a new handle for changed data. At 100 TB the
-    assignment column is written alongside the vectors (partition by
-    cell) so probing prunes file scans. ``n_cells="auto"`` applies the
-    √(distinct) sizing rule (:func:`auto_n_cells`).
+    assignment of every corpus vector) is held on the ``corpus`` handle
+    and shared with :func:`ivfpq_topk` (:func:`_ivf_index`; pass a new
+    handle for changed data), and every call computes only its query
+    probes; the per-query candidate set is |corpus| * n_probe / n_cells
+    — the recall/cost dial every production ANN system exposes. At
+    100 TB the assignment column is written alongside the vectors
+    (partition by cell) so probing prunes file scans.
+    ``n_cells="auto"`` applies the √(distinct) sizing rule
+    (:func:`auto_n_cells`).
     """
-
-    def build():
-        cells = _resolve_n_cells(corpus, n_cells, vec_col, "ivf_cosine_topk")
-        centroids = kmeans_lite(corpus, cells, iterations, id_col, vec_col)
-        return centroids, resilient_checkpoint(
-            _assign_cells(corpus.select(id_col, vec_col), centroids, id_col, vec_col)
-        )
-
-    centroids, indexed = held(
-        corpus, ("ivf_cosine_topk", n_cells, iterations, id_col, vec_col), build
-    )
+    centroids, indexed = _ivf_index(corpus, n_cells, iterations, id_col, vec_col)
     probes = _assign_cells(queries, centroids, query_id_col, query_vec_col, n_probe)
     cand = indexed.join(F.broadcast(probes), "cell").filter(
         F.col(query_id_col) != F.col(id_col)
@@ -973,8 +1045,7 @@ def ivf_cosine_topk(
             6,
         ).alias("cosine_sim"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine_sim"), F.col(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rank_topk(scored, "cosine_sim", k, query_id_col, id_col)
 
 
 def label_centroids(
@@ -1513,6 +1584,45 @@ def _pq_assign(
     )
 
 
+def _sub_blocks(
+    frame: DataFrame, key_col: str, vec_col: str, n_sub: int, sub: int, out_col: str
+) -> DataFrame:
+    """The PQ split: one ``(key_col, block, out_col)`` row per
+    contiguous ``sub``-long sub-vector of ``vec_col`` (as
+    ARRAY<DOUBLE>), block 1..``n_sub`` — shared by codebook training,
+    encoding and the query side of the ADC lookup table, so every side
+    slices identically."""
+    blocks = F.array(
+        *[
+            F.slice(F.col(vec_col).cast("array<double>"), (b - 1) * sub + 1, sub)
+            for b in range(1, n_sub + 1)
+        ]
+    )
+    return frame.select(
+        F.col(key_col), F.posexplode(blocks).alias("_b0", out_col)
+    ).select(F.col(key_col), (F.col("_b0") + 1).alias("block"), out_col)
+
+
+def _adc_lut(
+    queries: DataFrame,
+    books: DataFrame,
+    n_sub: int,
+    sub: int,
+    query_id_col: str,
+    query_vec_col: str,
+) -> DataFrame:
+    """Distributed-side ADC lookup table ``(query, block, code, _pd)``:
+    each query's sub-blocks joined to the broadcast (block, code,
+    centroid) codebook, ``_pd`` = round(dot(sub-query, centroid), 6)."""
+    qblocks = _sub_blocks(queries, query_id_col, query_vec_col, n_sub, sub, "_qv")
+    return qblocks.join(F.broadcast(books), "block").select(
+        query_id_col,
+        "block",
+        "code",
+        F.round(_dot(F.col("_qv"), F.col("centroid")), 6).alias("_pd"),
+    )
+
+
 def pq_codebooks(
     corpus: DataFrame,
     dim: int = 64,
@@ -1572,11 +1682,8 @@ def pq_codebooks(
         # NULL vectors are not trainable input (see kmeans_lite): as a
         # seed one crashes the seed collect
         trainable = corpus.filter(F.col(vec_col).isNotNull())
-        seed_hash = F.expr(
-            f"cast(conv(substring(md5(cast(`{id_col}` as string)), 1, 15), 16, 10) as bigint)"
-        )
         seed_rows = (
-            trainable.withColumn("_r", seed_hash)
+            trainable.withColumn("_r", _md5_seed_order(id_col))
             .orderBy("_r")
             .limit(n_codes)
             .select("_r", F.col(vec_col).cast("array<double>").alias("_seed"))
@@ -1587,21 +1694,12 @@ def pq_codebooks(
             for i, r in enumerate(sorted(seed_rows, key=lambda r: r["_r"]))
             for b in range(1, n_sub + 1)
         ]
-        bcorpus = trainable.select(
-            F.col(id_col),
-            F.posexplode(
-                F.array(
-                    *[
-                        F.slice(F.col(vec_col).cast("array<double>"), (b - 1) * sub + 1, sub)
-                        for b in range(1, n_sub + 1)
-                    ]
-                )
-            ).alias("_b0", "_sv"),
-        ).select(F.col(id_col), (F.col("_b0") + 1).alias("block"), "_sv")
         # lazy checkpoint: each Lloyd iteration re-read the corpus
         # scan + spread + sub-block explode otherwise (kmeans_lite's
         # training-cache discipline; freed on GC, no cross-run reuse)
-        bcorpus = resilient_checkpoint(bcorpus)
+        bcorpus = resilient_checkpoint(
+            _sub_blocks(trainable, id_col, vec_col, n_sub, sub, "_sv")
+        )
         for _ in range(iterations):
             if not cents:
                 # empty trainable corpus: no model to refine (kmeans_lite)
@@ -1633,16 +1731,7 @@ def pq_encode(
     (id, block)-keyed argmin window. Returns (id, block, code) —
     dim/n_sub/8 bytes per vector per block, the compression PQ
     exists for."""
-    sub = dim // n_sub
-    blocks = F.array(
-        *[
-            F.slice(F.col(vec_col).cast("array<double>"), (b - 1) * sub + 1, sub)
-            for b in range(1, n_sub + 1)
-        ]
-    )
-    exploded = corpus.select(
-        F.col(id_col), F.posexplode(blocks).alias("_b0", "_sv")
-    ).select(F.col(id_col), (F.col("_b0") + 1).alias("block"), "_sv")
+    exploded = _sub_blocks(corpus, id_col, vec_col, n_sub, dim // n_sub, "_sv")
     return _pq_assign(exploded, codebooks, id_col, n_sub).select(
         id_col, "block", "code"
     )
@@ -1671,9 +1760,9 @@ def pq_adc_topk(
     the (id, block, code) frame — 8 bytes a block instead of the full
     vector — and the LUT join is broadcast (|Q|·n_sub·n_codes rows).
     The codes frame is built once per index build, not per query
-    batch. Returns (query_id, vec_id, adc_score, rank); adc_score
-    approximates the raw dot product (NOT normalized cosine — PQ
-    ranking semantics)."""
+    batch. Returns (query_id, vec_id, adc_score[, cosine_sim], rank);
+    adc_score approximates the raw dot product (NOT normalized cosine —
+    PQ ranking semantics)."""
     books = pq_codebooks(
         corpus, dim, n_sub, n_codes, iterations, id_col, vec_col
     )
@@ -1715,55 +1804,17 @@ def pq_adc_topk(
         )
     else:
         codes = pq_encode(corpus, books, dim, n_sub, id_col, vec_col)
-        qblocks_arr = F.array(
-            *[
-                F.slice(F.col(query_vec_col).cast("array<double>"), (b - 1) * sub + 1, sub)
-                for b in range(1, n_sub + 1)
-            ]
-        )
-        qblocks = queries.select(
-            F.col(query_id_col), F.posexplode(qblocks_arr).alias("_b0", "_qv")
-        ).select(F.col(query_id_col), (F.col("_b0") + 1).alias("block"), "_qv")
-        lut = qblocks.join(F.broadcast(books), "block").select(
-            query_id_col,
-            "block",
-            "code",
-            F.round(_dot(F.col("_qv"), F.col("centroid")), 6).alias("_pd"),
-        )
+        lut = _adc_lut(queries, books, n_sub, sub, query_id_col, query_vec_col)
         scored = (
             codes.join(F.broadcast(lut), ["block", "code"])
             .filter(F.col(query_id_col) != F.col(id_col))
             .groupBy(query_id_col, id_col)
             .agg(F.round(F.sum("_pd"), 6).alias("adc_score"))
         )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("adc_score"), F.col(id_col))
-    ranked = scored.withColumn("rank", F.row_number().over(w))
-    if rerank_shortlist is None:
-        return ranked.filter(F.col("rank") <= k)
-    # IVFADC-style exact re-rank: the ADC pass only SHORTLISTS
-    # (top ``rerank_shortlist`` codes-reconstructed candidates); the
-    # true vectors are fetched for that shortlist alone and re-scored
-    # with exact cosine. At 100 TB this is the standard two-stage
-    # read: the cheap pass touches 8-byte codes, the expensive
-    # full-vector read touches |Q|·shortlist rows.
-    shortlist = ranked.filter(F.col("rank") <= rerank_shortlist).select(
-        query_id_col, id_col, "adc_score"
+    return _shortlist_topk(
+        scored, "adc_score", k, rerank_shortlist, corpus, queries,
+        id_col, vec_col, query_id_col, query_vec_col,
     )
-    qv = queries.select(
-        F.col(query_id_col), F.col(query_vec_col).cast("array<double>").alias("_qv")
-    )
-    cand = (
-        shortlist.join(corpus.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("_cv")), id_col)
-        .join(F.broadcast(qv), query_id_col)
-        .select(
-            query_id_col,
-            id_col,
-            "adc_score",
-            F.round(cosine(F.col("_cv"), F.col("_qv")), 6).alias("cosine_sim"),
-        )
-    )
-    wr = Window.partitionBy(query_id_col).orderBy(F.desc("cosine_sim"), F.col(id_col))
-    return cand.withColumn("rank", F.row_number().over(wr)).filter(F.col("rank") <= k)
 
 
 def ivfpq_topk(
@@ -1804,19 +1855,14 @@ def ivfpq_topk(
     element-wise double math, and the per-block chains reuse the PQ
     discipline, so the DuckDB twin hash-matches.
     """
-    cents = kmeans_lite(
-        corpus, n_cells, coarse_iterations, id_col, vec_col
-    )
     # the cell assignment IS the IVF index artifact — it feeds both
     # the residual/codes build and the query-time candidate probe, and
     # a broadcast probe side re-executes its upstream chain (no
-    # ReusedExchange), so materialize it once per call, exactly as a
-    # production IVF build stores its inverted lists (nothing is
-    # reused across calls; reliable mode covers it). Only the columns
-    # the index needs: an RDD scan cannot prune the rest.
-    indexed = resilient_checkpoint(
-        _assign_cells(corpus.select(id_col, vec_col), cents, id_col, vec_col)
-    )
+    # ReusedExchange), so it is materialized once and held on the
+    # corpus handle: the same index ivf_cosine_topk builds and probes
+    # at these (n_cells, iterations) (reliable mode covers it). The
+    # residual codes below are still computed per call.
+    cents, indexed = _ivf_index(corpus, n_cells, coarse_iterations, id_col, vec_col)
     cents_l = _local_rows(cents)
     if _literal_side(cents_l):
         # literal residual (r14): the centroid model is driver-local,
@@ -1903,21 +1949,7 @@ def ivfpq_topk(
             )
         )
     else:
-        qblocks_arr = F.array(
-            *[
-                F.slice(F.col(query_vec_col).cast("array<double>"), (b - 1) * sub + 1, sub)
-                for b in range(1, n_sub + 1)
-            ]
-        )
-        qblocks = queries.select(
-            F.col(query_id_col), F.posexplode(qblocks_arr).alias("_b0", "_qv")
-        ).select(F.col(query_id_col), (F.col("_b0") + 1).alias("block"), "_qv")
-        lut = qblocks.join(F.broadcast(books), "block").select(
-            query_id_col,
-            "block",
-            "code",
-            F.round(_dot(F.col("_qv"), F.col("centroid")), 6).alias("_pd"),
-        )
+        lut = _adc_lut(queries, books, n_sub, sub, query_id_col, query_vec_col)
         codes = pq_encode(resid, books, dim, n_sub, id_col, "_res")
         cand = (
             indexed.select(id_col, "cell")
@@ -1935,35 +1967,10 @@ def ivfpq_topk(
             id_col,
             F.round(F.col("_coarse") + F.col("_s1"), 6).alias("adc_score"),
         )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("adc_score"), F.col(id_col))
-    ranked = scored.withColumn("rank", F.row_number().over(w))
-    if rerank_shortlist is None:
-        return ranked.filter(F.col("rank") <= k)
-    # IVFADC's standard second stage: exact re-rank of the ADC
-    # shortlist — full vectors are read for |Q|·shortlist rows only
-    shortlist = ranked.filter(F.col("rank") <= rerank_shortlist).select(
-        query_id_col, id_col, "adc_score"
+    return _shortlist_topk(
+        scored, "adc_score", k, rerank_shortlist, corpus, queries,
+        id_col, vec_col, query_id_col, query_vec_col,
     )
-    qv = queries.select(
-        F.col(query_id_col), F.col(query_vec_col).cast("array<double>").alias("_qv")
-    )
-    cand2 = (
-        shortlist.join(
-            corpus.select(
-                F.col(id_col), F.col(vec_col).cast("array<double>").alias("_cv")
-            ),
-            id_col,
-        )
-        .join(F.broadcast(qv), query_id_col)
-        .select(
-            query_id_col,
-            id_col,
-            "adc_score",
-            F.round(cosine(F.col("_cv"), F.col("_qv")), 6).alias("cosine_sim"),
-        )
-    )
-    wr = Window.partitionBy(query_id_col).orderBy(F.desc("cosine_sim"), F.col(id_col))
-    return cand2.withColumn("rank", F.row_number().over(wr)).filter(F.col("rank") <= k)
 
 
 def sq8_stats(
@@ -1996,6 +2003,18 @@ def _sq8_code(v: Column, lo: Column, hi: Column) -> Column:
     ).otherwise(F.lit(0).cast("long"))
 
 
+def _sq8_bounds(stats: DataFrame) -> DataFrame:
+    """:func:`sq8_stats` as ONE row of pos-ordered (_lo[], _hi[]) arrays."""
+    return stats.groupBy().agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", "lo"))), lambda s: s["lo"]
+        ).alias("_lo"),
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", "hi"))), lambda s: s["hi"]
+        ).alias("_hi"),
+    )
+
+
 def sq8_encode(
     corpus: DataFrame,
     stats: DataFrame,
@@ -2008,14 +2027,7 @@ def sq8_encode(
     (lo[], hi[]) arrays and broadcast — the encode pass is map-only
     (no shuffle), 1 byte of information per dimension, the 4×/8×
     compression scalar quantization exists for."""
-    one = stats.groupBy().agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "lo"))), lambda s: s["lo"]
-        ).alias("_lo"),
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "hi"))), lambda s: s["hi"]
-        ).alias("_hi"),
-    )
+    one = _sq8_bounds(stats)
     return corpus.crossJoin(F.broadcast(one)).select(
         F.col(id_col),
         F.transform(
@@ -2063,14 +2075,7 @@ def sq8_topk(
     (query_id, vec_id, sq_score[, cosine_sim], rank)."""
     stats = sq8_stats(corpus, vec_col)
     codes = sq8_encode(corpus, stats, id_col, vec_col)
-    one = stats.groupBy().agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "lo"))), lambda s: s["lo"]
-        ).alias("_lo"),
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "hi"))), lambda s: s["hi"]
-        ).alias("_hi"),
-    )
+    one = _sq8_bounds(stats)
     recon = codes.crossJoin(F.broadcast(one)).select(
         F.col(id_col),
         F.transform(
@@ -2096,33 +2101,10 @@ def sq8_topk(
             F.round(_dot(F.col("_qv0"), F.col("_rv")), 6).alias("sq_score"),
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("sq_score"), F.col(id_col))
-    ranked = scored.withColumn("rank", F.row_number().over(w))
-    if rerank_shortlist is None:
-        return ranked.filter(F.col("rank") <= k)
-    shortlist = ranked.filter(F.col("rank") <= rerank_shortlist).select(
-        query_id_col, id_col, "sq_score"
+    return _shortlist_topk(
+        scored, "sq_score", k, rerank_shortlist, corpus, queries,
+        id_col, vec_col, query_id_col, query_vec_col,
     )
-    qv = queries.select(
-        F.col(query_id_col), F.col(query_vec_col).cast("array<double>").alias("_qv")
-    )
-    cand = (
-        shortlist.join(
-            corpus.select(
-                F.col(id_col), F.col(vec_col).cast("array<double>").alias("_cv")
-            ),
-            id_col,
-        )
-        .join(F.broadcast(qv), query_id_col)
-        .select(
-            query_id_col,
-            id_col,
-            "sq_score",
-            F.round(cosine(F.col("_cv"), F.col("_qv")), 6).alias("cosine_sim"),
-        )
-    )
-    wr = Window.partitionBy(query_id_col).orderBy(F.desc("cosine_sim"), F.col(id_col))
-    return cand.withColumn("rank", F.row_number().over(wr)).filter(F.col("rank") <= k)
 
 
 def kcenter_select(
@@ -2155,11 +2137,8 @@ def kcenter_select(
     pts = corpus.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v")
     )
-    seed_hash = F.expr(
-        f"cast(conv(substring(md5(cast(`{id_col}` as string)), 1, 15), 16, 10) as bigint)"
-    )
     seed = (
-        pts.withColumn("_h", seed_hash)
+        pts.withColumn("_h", _md5_seed_order(id_col))
         .orderBy("_h", id_col)
         .limit(1)
         .select(id_col, "_v")

@@ -7,6 +7,8 @@ every later call with that handle.
   probe parameter is baked into the index;
 - a second call on the same handle builds nothing: zero build-time
   jobs, and its executed plan scans the held frame exactly once;
+- ivf_cosine_topk and ivfpq_topk at the same build key share one IVF
+  index;
 - another handle over the same table, or another build key, builds its
   own index.
 """
@@ -241,6 +243,37 @@ def test_ivf_reuse_on_one_handle_and_rebuild_on_another(spark, emb, monkeypatch)
     other = handle.select("*")
     assert sorted(sim.ivf_cosine_topk(other, q, k=5, n_cells=4, n_probe=2).collect()) == rows
     assert trained[-1] == (4, 2) and len(trained) == 6
+
+
+def test_ivfpq_shares_the_held_ivf_index(spark, emb, monkeypatch):
+    """ivfpq_topk probes the IVF index ivf_cosine_topk holds at the same
+    (n_cells, iterations): one cell assignment per handle and key."""
+    assignments = []
+    checkpoint = sim.resilient_checkpoint
+
+    def spy(df, *args, **kwargs):
+        if "cell" in df.columns:
+            assignments.append(df.columns)
+        return checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(sim, "resilient_checkpoint", spy)
+    q = _vec_queries(emb)
+    pq = dict(k=5, n_probe=2, dim=64, n_sub=4, n_codes=4, rerank_shortlist=20)
+    handle = emb.select("*")
+    sim.ivf_cosine_topk(handle, q, k=5, n_cells=4, n_probe=2).collect()
+    first = sim.ivfpq_topk(handle, q, n_cells=4, **pq)
+    rows = sorted(first.collect())
+    assert len(assignments) == 1
+    second, jobs = _build_jobs(spark, lambda: sim.ivfpq_topk(handle, q, n_cells=4, **pq))
+    assert jobs == 0 and len(assignments) == 1
+    assert sorted(second.collect()) == rows
+    assert _held_scans(second, "cell") == 1
+    # another n_cells builds its own index
+    sim.ivfpq_topk(handle, q, n_cells=3, **pq).collect()
+    assert len(assignments) == 2
+    # another handle over the same table builds its own, with the same rows
+    assert sorted(sim.ivfpq_topk(handle.select("*"), q, n_cells=4, **pq).collect()) == rows
+    assert len(assignments) == 3
 
 
 def test_held_builds_once_per_handle_and_key(spark):

@@ -3,6 +3,7 @@ recall of the LSH-bucketed scale path on real test embeddings."""
 
 from __future__ import annotations
 
+import pathlib
 import re
 
 import numpy as np
@@ -759,8 +760,9 @@ def test_ivf_dedup_auto_cells_matches_explicit(spark):
 
 _GATE_RUNS = {
     # name: (run(corpus, queries), Window count of the literal plan —
-    # the final ranking only; None where the output is a driver-built
-    # model, whose gates fire during training)
+    # the final ranking, plus the approximate ranking ahead of an exact
+    # re-rank; None where the output is a driver-built model, whose
+    # gates fire during training)
     "kmeans_lite": (lambda c, q: sim.kmeans_lite(c, k=4, iterations=2), None),
     "_assign_cells": (
         lambda c, q: sim._assign_cells(
@@ -796,6 +798,19 @@ _GATE_RUNS = {
             c, q, k=3, n_cells=4, n_probe=2, dim=64, n_sub=4, n_codes=4
         ),
         1,
+    ),
+    "pq_adc_topk_rerank": (
+        lambda c, q: sim.pq_adc_topk(
+            c, q, k=3, dim=64, n_sub=4, n_codes=4, rerank_shortlist=10
+        ),
+        2,
+    ),
+    "ivfpq_topk_rerank": (
+        lambda c, q: sim.ivfpq_topk(
+            c, q, k=3, n_cells=4, n_probe=2, dim=64, n_sub=4, n_codes=4,
+            rerank_shortlist=10,
+        ),
+        2,
     ),
 }
 
@@ -852,3 +867,13 @@ def test_ann_gate_both_sides_same_rows(spark, monkeypatch, name):
     assert literal.count() > 0
     # exceptAll both ways, in one job (shared subtrees reuse exchanges)
     assert literal.exceptAll(dist).unionByName(dist.exceptAll(literal)).count() == 0
+
+
+def test_ann_tails_written_once():
+    """The ANN top-k operators share one per-query ranking window
+    (``_rank_topk``) and the k-means / PQ / k-center trainers one md5
+    seed-order expression (``_md5_seed_order``): a second copy in
+    ``similarity.py`` is a tail that can drift from the others."""
+    src = pathlib.Path(sim.__file__).read_text()
+    assert src.count("Window.partitionBy(query_id_col)") == 1
+    assert src.count("conv(substring(md5(") == 1
