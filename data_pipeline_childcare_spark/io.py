@@ -9,6 +9,7 @@ column pruning and predicate pushdown reach the scan.
 
 from __future__ import annotations
 
+import logging
 import os
 import re
 
@@ -124,6 +125,7 @@ def spread_partitions(df: DataFrame, *key_cols: str) -> DataFrame:
 
 RELIABLE_CKPT_CONF = "spark.graft.checkpoint.reliable"
 RELIABLE_CKPT_DIR_CONF = "spark.graft.checkpoint.dir"
+DEFAULT_RELIABLE_CKPT_DIR = "/tmp/spark-graft-checkpoints"
 
 
 def resilient_checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
@@ -143,19 +145,28 @@ def resilient_checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
     checkpoint directory (``spark.graft.checkpoint.dir``, or the
     context's already-configured ``setCheckpointDir``; defaults to a
     local ``/tmp`` dir so the flag works out of the box on one box —
-    point it at durable shared storage in production). Values are
-    unchanged either way: both forms materialize the same rows; only
-    where the blocks live differs."""
+    point it at durable shared storage in production). Falling back to
+    that default logs one warning: the fallback sets the context's
+    checkpoint dir, so later calls find it set. Values are unchanged
+    either way: both forms materialize the same rows; only where the
+    blocks live differs."""
     spark = df.sparkSession
     if str(spark.conf.get(RELIABLE_CKPT_CONF, "false")).lower() != "true":
         return df.localCheckpoint(eager=eager)
     sc = spark.sparkContext
     if sc._jsc.sc().checkpointDir().isEmpty():
-        sc.setCheckpointDir(
-            spark.conf.get(
-                RELIABLE_CKPT_DIR_CONF, "/tmp/spark-graft-checkpoints"
+        ckpt_dir = spark.conf.get(RELIABLE_CKPT_DIR_CONF, None)
+        if ckpt_dir is None:
+            ckpt_dir = DEFAULT_RELIABLE_CKPT_DIR
+            logging.getLogger(__name__).warning(
+                "%s=true but neither %s nor the context's checkpoint dir "
+                "is set: checkpointing to the local default %s, which does "
+                "not survive the loss of this host. Point %s at durable "
+                "shared storage.",
+                RELIABLE_CKPT_CONF, RELIABLE_CKPT_DIR_CONF, ckpt_dir,
+                RELIABLE_CKPT_DIR_CONF,
             )
-        )
+        sc.setCheckpointDir(ckpt_dir)
     return df.checkpoint(eager=eager)
 
 

@@ -22,17 +22,21 @@ is LSH-banded (never all-pairs); fingerprints shuffle 32-byte keys;
 the benchmark shingle set broadcasts; the split is a pure projection.
 Every join in the final assembly is keyed by the document id.
 
-Caching is delegated to the caller (same discipline as the dedup
-operators): each stage scans the text column independently, so a
-real run should ``docs.persist()`` before calling and unpersist
-after the output is materialized — the function itself must not leak
-a cached frame into the session.
+The input is read once: ``(id, text)`` is cut through
+``io.resilient_checkpoint`` (lazy, so no job runs at build time) and
+all five stages read that one frame, so an expensive upstream (a
+parse, a union of sources) is evaluated once per row instead of once
+per stage. The cut is per call: nothing is registered in the session
+cache (the function must not leak a cached frame into the session),
+and the reliable-checkpoint mode covers it like every other cut.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from data_pipeline_childcare_spark.io import resilient_checkpoint
 
 
 def curate_corpus(
@@ -71,6 +75,7 @@ def curate_corpus(
     )
     from data_pipeline_childcare_spark.operators.split import hash_split  # noqa: PLC0415
 
+    docs = resilient_checkpoint(docs.select(id_col, text_col))
     q = docs.select(
         F.col(id_col),
         quality_score(text_col, stopwords).alias("quality"),

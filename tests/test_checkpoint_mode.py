@@ -11,12 +11,14 @@ from __future__ import annotations
 
 import ast
 import glob
+import logging
 import os
 import pathlib
 
 import pytest
 from pyspark.sql import functions as F
 
+from data_pipeline_childcare_spark import io as io_mod
 from data_pipeline_childcare_spark.io import (
     RELIABLE_CKPT_CONF,
     RELIABLE_CKPT_DIR_CONF,
@@ -175,6 +177,78 @@ def test_dedup_ann_tokenizer_reliable_mode_same_output(spark, reliable):
     assert len(got_reliable["bm25_topk"]) == 4
     kept = got_reliable["minhash_dedup_portable"]
     assert len(kept) == 2 and not any("doc_id=2" in r for r in kept), kept
+
+
+def test_curate_corpus_reliable_mode_same_output(spark, reliable):
+    """curate_corpus cuts its input once and MinHash cuts its
+    signatures: in reliable mode both land in the checkpoint dir as one
+    RDD each, and the rows equal the default local mode's."""
+    from data_pipeline_childcare_spark.plans.curation import curate_corpus
+
+    base = "the quick brown fox jumps over the lazy dog near the river bank"
+    docs = spark.createDataFrame(
+        [(1, base), (2, base), (3, base + " today"), (4, None),
+         (5, "a completely different short text about other things here")],
+        "doc_id long, text string",
+    )
+    bench = spark.createDataFrame([(9, base)], "doc_id long, text string")
+
+    def rows():
+        out = curate_corpus(docs, bench, ("the", "a"), token_range=(5, 100))
+        return sorted(map(str, out.collect()))
+
+    def rdd_dirs():
+        return set(glob.glob(os.path.join(reliable, "*", "rdd-*")))
+
+    before = rdd_dirs()
+    got_reliable = rows()
+    assert len(rdd_dirs() - before) == 2
+    spark.conf.set(RELIABLE_CKPT_CONF, "false")
+    assert rows() == got_reliable
+    assert len(got_reliable) == 5
+
+
+def test_reliable_default_dir_warns_once(spark, tmp_path, caplog, monkeypatch):
+    """Reliable mode with neither ``spark.graft.checkpoint.dir`` nor a
+    context checkpoint dir falls back to the local default and warns
+    once; an explicit dir does not warn."""
+    assert io_mod.DEFAULT_RELIABLE_CKPT_DIR == "/tmp/spark-graft-checkpoints"
+    # the fallback's dir is created by setCheckpointDir: keep it in tmp_path
+    monkeypatch.setattr(io_mod, "DEFAULT_RELIABLE_CKPT_DIR", str(tmp_path / "fallback"))
+    ctx = spark.sparkContext._jsc.sc()
+    # the context's checkpoint dir can be set but not unset through the
+    # public API; its private[spark] setter is public in the bytecode
+    set_ctx_dir = getattr(ctx, "checkpointDir_$eq")
+    prev_ctx_dir = ctx.checkpointDir()
+    prev_conf_dir = spark.conf.get(RELIABLE_CKPT_DIR_CONF, None)
+
+    def warnings():
+        return [r for r in caplog.records if r.name == io_mod.__name__]
+
+    spark.conf.set(RELIABLE_CKPT_CONF, "true")
+    try:
+        spark.conf.unset(RELIABLE_CKPT_DIR_CONF)
+        set_ctx_dir(spark._jvm.scala.Option.apply(None))
+        with caplog.at_level(logging.WARNING, logger=io_mod.__name__):
+            for _ in range(2):
+                assert resilient_checkpoint(spark.range(3)).count() == 3
+        assert len(warnings()) == 1
+        assert str(tmp_path / "fallback") in ctx.checkpointDir().get()
+
+        caplog.clear()
+        spark.conf.set(RELIABLE_CKPT_DIR_CONF, str(tmp_path / "explicit"))
+        set_ctx_dir(spark._jvm.scala.Option.apply(None))
+        with caplog.at_level(logging.WARNING, logger=io_mod.__name__):
+            assert resilient_checkpoint(spark.range(3)).count() == 3
+        assert warnings() == []
+        assert str(tmp_path / "explicit") in ctx.checkpointDir().get()
+    finally:
+        spark.conf.set(RELIABLE_CKPT_CONF, "false")
+        if prev_conf_dir is None:
+            spark.conf.unset(RELIABLE_CKPT_DIR_CONF)
+        else:
+            spark.conf.set(RELIABLE_CKPT_DIR_CONF, prev_conf_dir)
+        set_ctx_dir(prev_ctx_dir)
 
 
 def test_no_local_checkpoint_outside_io():

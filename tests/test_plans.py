@@ -618,6 +618,40 @@ def test_curate_corpus_null_text_gets_audit_row(spark):
     assert got[3]["exact_dup_of"] == 2
 
 
+def test_curate_corpus_reads_each_input_row_once(spark):
+    """The five curation stages share one cut of ``(id, text)``: an
+    expensive upstream (here a Python UDF that counts its calls) is
+    evaluated once per input row, not once per stage, and the cut
+    registers nothing in the session cache."""
+    from pyspark.sql.types import StringType
+
+    from data_pipeline_childcare_spark.plans.curation import curate_corpus
+
+    words = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu".split()
+    rows = [
+        (i, " ".join(words[(i + j) % len(words)] for j in range(8 + i % 5)))
+        for i in range(40)
+    ]
+    rows += [(40, rows[0][1]), (41, None)]  # an exact dup and a NULL text
+    calls = spark.sparkContext.accumulator(0)
+
+    def counted(text):
+        calls.add(1)
+        return text
+
+    docs = (
+        spark.sparkContext.parallelize(rows, 3)
+        .toDF("doc_id long, text string")
+        .withColumn("text", F.udf(counted, StringType())("text"))
+    )
+    bench = spark.createDataFrame([(9, rows[5][1])], "doc_id long, text string")
+    got = curate_corpus(docs, bench, ("the", "a"), token_range=(5, 100)).collect()
+    assert len(got) == len(rows)
+    assert calls.value == len(rows)
+    assert {r["doc_id"]: r["exact_dup_of"] for r in got}[40] == 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_purge_customers_propagation_and_partition(spark):
     """Erasure closure: kept ∪ purged partitions every table exactly;
     lineitem erasure follows the FK chain (no custkey on the row);
